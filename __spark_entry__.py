@@ -94,14 +94,6 @@ def q_knn_ip(spark, sf_dir):
     return knn.knn_join(_docs(spark, sf_dir), _queries_df(spark, sf_dir), k=KNN_K, metric="IP")
 
 
-def q_knn_l2(spark, sf_dir):
-    return knn.knn_join(_docs(spark, sf_dir), _queries_df(spark, sf_dir), k=KNN_K, metric="L2")
-
-
-def q_knn_cosine(spark, sf_dir):
-    return knn.knn_join(_docs(spark, sf_dir), _queries_df(spark, sf_dir), k=KNN_K, metric="COSINE")
-
-
 def q_knn_metrics_topk(spark, sf_dir):
     """K1 exact kNN across all three DistanceComputeTypes (IP / L2 /
     Cosine, `index/retrieval_model.h:20`) as ONE relation with a metric
@@ -119,27 +111,6 @@ def q_knn_metrics_topk(spark, sf_dir):
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def q_knn_ip_filtered(spark, sf_dir):
-    return knn.knn_join(
-        _docs(spark, sf_dir),
-        _queries_df(spark, sf_dir),
-        k=KNN_K,
-        metric="IP",
-        predicate=F.col("label") == 1,
-    )
-
-
-def q_knn_ip_banded(spark, sf_dir):
-    return knn.knn_join(
-        _docs(spark, sf_dir),
-        _queries_df(spark, sf_dir),
-        k=KNN_K,
-        metric="IP",
-        min_score=BAND_LO,
-        max_score=BAND_HI,
-    )
 
 
 def q_knn_ip_filtered_banded(spark, sf_dir):
@@ -313,14 +284,6 @@ SQL_KNN_METRICS = " UNION ALL ".join(
     f"SELECT t.*, '{m}' AS metric FROM ({sql}) t"
     for m, sql in (("IP", SQL_KNN_IP), ("L2", SQL_KNN_L2), ("COSINE", SQL_KNN_COSINE))
 )
-SQL_KNN_IP_FILTERED = _sql_knn(
-    V.sql_dot("e.embedding", "q.qvec"), "DESC", where="WHERE e.label = 1"
-)
-SQL_KNN_IP_BANDED = _sql_knn(
-    V.sql_dot("e.embedding", "q.qvec"),
-    "DESC",
-    band=f"WHERE score >= {BAND_LO} AND score <= {BAND_HI}",
-)
 SQL_KNN_IP_FILTERED_BANDED = _sql_knn(
     V.sql_dot("e.embedding", "q.qvec"),
     "DESC",
@@ -486,69 +449,6 @@ WHERE len(list_intersect(tags, ['data','row','key'])) > 0
 """
 
 
-def q_search_projected_l2sqrt(spark, sf_dir):
-    """The full Search shape (SURVEY §3.1): pre-filter AND kNN with
-    l2_sqrt score presentation (`idl/fbs/request.fbs:39`) AND field
-    projection (P1) through the planner."""
-    from gamma_spark.plans.search import SearchRequest, VectorQuery, search
-
-    docs = _docs(spark, sf_dir)
-    req = SearchRequest(
-        vector_queries=[VectorQuery(field="embedding", queries=_queries_df(spark, sf_dir), metric="L2")],
-        topn=KNN_K,
-        fields=["label"],
-        l2_sqrt=True,
-    )
-    return search(docs, req, extra_predicate=F.col("label").isin(0, 1, 2))
-
-
-SQL_SEARCH_PROJECTED_L2SQRT = f"""
-WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < {KNN_NQ}),
-s AS (
-  SELECT q.qid, e.vec_id AS _docid, sqrt({{l2sq}}) AS score, e.label
-  FROM embeddings e CROSS JOIN q WHERE e.label IN (0, 1, 2)
-)
-SELECT _docid, qid, score, rank::INT AS rank, label FROM (
-  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score ASC, _docid ASC) AS rank
-  FROM s
-) t WHERE rank <= {KNN_K}
-""".replace("{l2sq}", V.sql_l2_squared("e.embedding", "q.qvec"))
-
-
-def q_search_with_total(spark, sf_dir):
-    """R8 result-packing parity: every hit carries ``total`` = the
-    filter-survivor count (`search/gamma_engine.cc:448-449`) and a
-    ``_source`` payload of the stored fields
-    (`c_api/api_data/gamma_response.cc:215-260`)."""
-    from gamma_spark.plans.search import SearchRequest, VectorQuery, search
-
-    docs = _docs(spark, sf_dir)
-    req = SearchRequest(
-        vector_queries=[VectorQuery(field="embedding", queries=_queries_df(spark, sf_dir), metric="L2")],
-        topn=KNN_K,
-        source_fields=["_docid", "label"],
-        with_total=True,
-    )
-    return search(docs, req, extra_predicate=F.col("label").isin(0, 1))
-
-
-SQL_SEARCH_WITH_TOTAL = f"""
-WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < {KNN_NQ}),
-m AS (SELECT * FROM embeddings WHERE label IN (0, 1)),
-s AS (
-  SELECT q.qid, e.vec_id AS _docid, {{l2sq}} AS score,
-         '{{"_docid":' || e.vec_id || ',"label":' || e.label || '}}' AS _source
-  FROM m e CROSS JOIN q
-)
-SELECT _docid, qid, score, rank::INT AS rank, _source,
-       (SELECT count(*) FROM m) AS total
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score ASC, _docid ASC) AS rank
-  FROM s
-) t WHERE rank <= {KNN_K}
-""".replace("{l2sq}", V.sql_l2_squared("e.embedding", "q.qvec"))
-
-
 def q_search_request_full(spark, sf_dir):
     """EVERY SearchRequest feature in one request — pre-filter, kNN
     with l2_sqrt presentation (`idl/fbs/request.fbs:39`), P1 field
@@ -653,17 +553,6 @@ def q_upsert_last_wins(spark, sf_dir):
     )
     merged = table.add_or_update(batch, order_col="_pos")
     return merged.df.select("doc_id", "text", "n_chars")
-
-
-SQL_UPSERT_LAST_WINS = """
-SELECT doc_id,
-       CASE WHEN doc_id % 10 = 0 THEN 'updated:' || doc_id ELSE text END AS text,
-       CASE WHEN doc_id % 10 = 0 THEN n_chars + 1000 ELSE n_chars END AS n_chars
-FROM documents
-UNION ALL
-SELECT doc_id + 1000000 AS doc_id, 'new:' || doc_id AS text, doc_id AS n_chars
-FROM documents WHERE doc_id < 5
-"""
 
 
 def q_upsert_chain(spark, sf_dir):
@@ -1269,14 +1158,6 @@ def q_multimodal_features(spark, sf_dir):
     )
 
 
-SQL_MULTIMODAL_FEATURES = """
-SELECT doc_id, 16 AS feat_dim,
-       doc_id % 256 AS top_px,
-       (doc_id * 7) % 256 AS bottom_px
-FROM documents
-"""
-
-
 def q_multimodal_resize(spark, sf_dir):
     """resize -> feature-extract pipeline composed through the codec
     registry (VERDICT r3 #7 — these kernels were pytest-only): per-doc
@@ -1795,39 +1676,10 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     return D.minhash_dedup_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _sql_dedup_minhash_lsh() -> str:
-    from gamma_spark.operators import dedup as D
-
-    sig = D.sql_minhash_signatures(
-        D.sql_shingles("documents", "doc_id", "text", 3), "doc_id"
-    )
-    return D.sql_lsh_candidate_pairs(sig, "doc_id")
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    from gamma_spark.operators import dedup as D
-
-    return D.jaccard_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.3
-    )
-
-
-def _sql_dedup_jaccard() -> str:
-    from gamma_spark.operators import dedup as D
-
-    return D.sql_jaccard_pairs("documents", "doc_id", "text", 3, 0.3)
-
-
 def q_simhash_signatures(spark, sf_dir):
     from gamma_spark.operators import dedup as D
 
     return D.simhash(_t(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-def _sql_simhash_signatures() -> str:
-    from gamma_spark.operators import dedup as D
-
-    return D.sql_simhash("documents", "doc_id", "text")
 
 
 def q_embedding_neardup(spark, sf_dir):
@@ -1887,17 +1739,6 @@ def q_dedup_groups(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(docs, "doc_id", "text")
     return G.resolve_groups(pairs, docs, "doc_id", keeper_order=F.col("n_chars"))
-
-
-def _sql_dedup_groups() -> str:
-    from gamma_spark.operators import dedup as D
-    from gamma_spark.operators import groups as G
-
-    sig = D.sql_minhash_signatures(
-        D.sql_shingles("documents", "doc_id", "text", 3), "doc_id"
-    )
-    pairs = D.sql_lsh_candidate_pairs(sig, "doc_id")
-    return G.sql_resolve_groups(pairs, "documents", "doc_id", "n_chars")
 
 
 def _sql_embedding_neardup_lsh() -> str:
@@ -2232,26 +2073,6 @@ def _sql_knn_graph_models_exact() -> str:
     return " UNION ALL ".join(
         f"SELECT *, '{m}' AS model FROM ({SQL_KNN_GRAPH}) t{i}"
         for i, m in enumerate(["IVF", "PQ"])
-    )
-
-
-def q_filter_tags_variants(spark, sf_dir):
-    """F3/F4/F5 tag-filter semantics as ONE relation with a variant
-    column (consolidates filter_tags_and + filter_tags_or_notin; both
-    predicate shapes still hash-checked)."""
-    parts = [
-        q_filter_tags_and(spark, sf_dir).withColumn("variant", F.lit("AND")),
-        q_filter_tags_or_notin(spark, sf_dir).withColumn("variant", F.lit("OR_NOTIN")),
-    ]
-    return parts[0].unionByName(parts[1])
-
-
-def _sql_filter_tags_variants() -> str:
-    return " UNION ALL ".join(
-        f"SELECT *, '{v}' AS variant FROM ({s}) t{i}"
-        for i, (v, s) in enumerate(
-            [("AND", SQL_FILTER_TAGS_AND), ("OR_NOTIN", SQL_FILTER_TAGS_OR_NOTIN)]
-        )
     )
 
 
@@ -2596,7 +2417,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_metrics_topk": q_knn_metrics_topk,
         # --- stable suite ---
         # knn_ip_filtered + knn_ip_banded consolidated into
-        # knn_ip_filtered_banded above (functions remain for pytest)
+        # knn_ip_filtered_banded above
         # knn_hamming_topk + knn_binaryivf_exact consolidated into
         # knn_hamming_variants (both paths still hash-checked)
         "knn_hamming_variants": q_knn_hamming_variants,
@@ -2609,7 +2430,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # filter_tags_and + filter_tags_or_notin consolidated into
         # filter_tags_variants folded into filter_scalar_variants (r11)
         # search_projected_l2sqrt + search_with_total consolidated into
-        # search_request_full above (functions remain for pytest)
+        # search_request_full above
         # filter_only_topn folded into filter_scalar_variants (r11)
         "point_lookup": q_point_lookup,
         # upsert_last_wins folded into upsert_chain (the chain's first
@@ -2628,7 +2449,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup_jaccard folded into dedup_minhash_verified (exact
         # n-gram Jaccard is its verify stage) and dedup_groups into
         # curation_pipeline + semantic_dedup_groups (CC + keeper runs
-        # hash-checked in both) — functions remain for bench/pytest.
+        # hash-checked in both) — q_dedup_groups remains for bench.
         # embedding_neardup + embedding_neardup_lsh consolidated into
         # embedding_neardup_variants (both paths still hash-checked)
         "embedding_neardup_variants": q_embedding_neardup_variants,

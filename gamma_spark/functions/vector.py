@@ -174,10 +174,6 @@ def sql_l2_squared(a: str, b: str) -> str:
     return f"list_reduce(list_prepend(0.0::DOUBLE, {d}), (acc, x) -> acc + x)"
 
 
-def sql_l2(a: str, b: str) -> str:
-    return f"list_distance(({a})::DOUBLE[], ({b})::DOUBLE[])"
-
-
 def sql_cosine(a: str, b: str) -> str:
     # zero-norm -> 0.0, the same contract as cosine() above
     denom = (

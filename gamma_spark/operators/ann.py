@@ -21,7 +21,6 @@ execution detail Spark delegates to the cluster (SURVEY §7.3).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,13 +31,10 @@ from gamma_spark.operators.pq import IvfPqIndex
 
 
 class FlatIndex:
-    """K1 — stateless; search() is the exact kernel (join path for small
-    query batches / oracle parity, scan path for throughput)."""
+    """K1 — stateless; search() is the exact scan kernel (the planner's
+    brute path picks the join kernel for small oracle batches)."""
 
     name = "FLAT"
-
-    def __init__(self, use_scan_kernel: bool = True):
-        self.use_scan_kernel = use_scan_kernel
 
     @classmethod
     def build(cls, docs: DataFrame, **kw) -> "FlatIndex":
@@ -46,8 +42,17 @@ class FlatIndex:
 
     def search(self, docs: DataFrame, queries: DataFrame, **kw) -> DataFrame:
         kw.pop("nprobe", None)
-        fn = knn.knn_scan if self.use_scan_kernel else knn.knn_join
-        return fn(docs, queries, **kw)
+        return knn.knn_scan(docs, queries, **kw)
+
+
+def _binarized(queries: DataFrame, query_id: str, query_vec: str) -> DataFrame:
+    """(qid, packed sign bits ``qsig``, float ``_probe_vec``): BINARYIVF
+    scores the signature and probes the float quantizer."""
+    return queries.select(
+        F.col(query_id).alias("qid"),
+        V.sign_bits(query_vec).alias("qsig"),
+        F.col(query_vec).alias("_probe_vec"),
+    )
 
 
 class BinaryIvfIndex:
@@ -57,7 +62,9 @@ class BinaryIvfIndex:
     The reference trains binary IVF with faiss k-means over binary
     codes (`index/impl/gamma_index_binary_ivf.cc:57`); we bucket by the
     float-vector quantizer (same recall intent: nearby vectors share
-    buckets) and score with XOR+popcount, which stays in codegen.
+    buckets) and run the IVFFLAT index's skeleton with the HAMMING
+    metric: probed by the float vectors, scored by XOR+popcount (in
+    codegen on the request path, the popcount scorer in the cogroup).
     """
 
     name = "BINARYIVF"
@@ -97,13 +104,9 @@ class BinaryIvfIndex:
     ) -> DataFrame:
         """Queries carry float vectors; they are binarized here with the
         same sign_bits packing used at build."""
-        qsig = queries.select(
-            F.col(query_id).alias("qid"), V.sign_bits(query_vec).alias("qsig"),
-            F.col(query_vec).alias("_probe_vec"),
-        )
         return self.ivf.search(
             None,
-            qsig,
+            _binarized(queries, query_id, query_vec),
             k=k,
             metric="HAMMING",
             doc_vec=self.sig_col,
@@ -134,19 +137,13 @@ class BinaryIvfIndex:
         super_probe: int = 4,
         **kw,
     ) -> DataFrame:
-        """Corpus-scale Hamming kNN join — the BINARYIVF twin of the
-        IVF/PQ distributed joins: float queries are binarized with the
-        build-time sign packing, probed by their float vectors
-        (probe_vec seam), and scored inside the cogroup kernel with an
-        XOR+popcount matrix (byte-LUT popcount, no per-row Python).
-        Queries never collected; salting/banding/hierarchy compose."""
-        qsig = queries.select(
-            F.col(query_id).alias("qid"),
-            V.sign_bits(query_vec).alias("qsig"),
-            F.col(query_vec).alias("_probe_vec"),
-        )
+        """Corpus-scale Hamming kNN join: float queries are binarized
+        with the build-time sign packing, probed by their float vectors
+        (``probe_vec``), and scored inside the cogroup kernel by the
+        popcount scorer. Queries never collected;
+        salting/banding/hierarchy compose."""
         return self.ivf.knn_join_distributed(
-            qsig,
+            _binarized(queries, query_id, query_vec),
             k=k,
             metric="HAMMING",
             nprobe=nprobe,

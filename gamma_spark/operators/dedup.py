@@ -1116,23 +1116,6 @@ WHERE {cos} >= {threshold}
 """
 
 
-def sql_embedding_neardup_lsh(
-    table: str, id_col: str, vec_col: str, threshold: float, prefilter_bits: int
-) -> str:
-    """Oracle twin of the LSH mode: the sign-band prefilter is
-    deterministic (bit-fold of the first ``prefilter_bits`` component
-    signs), so the whole pruned join is ANSI-SQL-expressible."""
-    cos = V.sql_cosine(f"a.{vec_col}", f"b.{vec_col}")
-    band_a = V.sql_sign_bits(f"a.{vec_col}", prefilter_bits)
-    band_b = V.sql_sign_bits(f"b.{vec_col}", prefilter_bits)
-    return f"""
-SELECT a.{id_col} AS id_a, b.{id_col} AS id_b, {cos} AS cosine
-FROM {table} a JOIN {table} b
-  ON a.{id_col} < b.{id_col} AND {band_a} = {band_b}
-WHERE {cos} >= {threshold}
-"""
-
-
 # ---------------------------------------------------------------------------
 # eval-set decontamination
 # ---------------------------------------------------------------------------

@@ -845,6 +845,8 @@ class HnswIndex:
         # on legacy loads — resolved lazily from the graph at query
         # time where needed
         self.dim = dim
+        # shards that hold docs, recorded at build/append (None: unknown)
+        self._filled_shards: list[int] | None = None
 
     # -- build -----------------------------------------------------------
     @classmethod
@@ -909,6 +911,9 @@ class HnswIndex:
             .groupBy("_shard")
             .applyInPandas(build_shard, schema=schema)
         )
+        # the shards that hold docs (search fans queries out to these
+        # only): one narrow pass over the source ids
+        filled = sorted(int(r[0]) for r in sharded.select("_shard").distinct().collect())
         router = None
         dim = None
         if path:
@@ -952,6 +957,7 @@ class HnswIndex:
                     "m": m,
                     "router": router,
                     "dim": dim,
+                    "shards": filled,
                 },
             )
             graph = docs.sparkSession.read.parquet(os.path.join(path, "graph"))
@@ -959,6 +965,7 @@ class HnswIndex:
             graph, nshards, metric_u, doc_vec, m=m, path=path, router=router,
             dim=dim,
         )
+        idx._filled_shards = filled
         # the source relation makes the operating-point dim resolvable
         # for in-memory indexes without re-running the graph build —
         # pinned ONLY while dim is unresolved (a path-backed build
@@ -998,6 +1005,9 @@ class HnswIndex:
             "_shard", (F.col("_shard") + F.lit(base)).cast("int")
         )
         merged = self.index_df.unionByName(shifted)
+        filled = self._filled_shards
+        if filled is not None:
+            filled = filled + [base + sh for sh in fresh._filled_shards]
         # resolve the operating-point dim from the appended batch when
         # this index predates dim recording: fresh was built path-less
         # so fresh.dim is None, but its source relation is new_docs —
@@ -1075,6 +1085,7 @@ class HnswIndex:
                         "m": self.m,
                         "router": self.router or None,
                         "dim": dim,
+                        "shards": filled,
                     },
                 )
             merged = self.index_df.sparkSession.read.parquet(
@@ -1084,6 +1095,7 @@ class HnswIndex:
             merged, base + nshards, self.metric, self.doc_vec, m=self.m,
             path=self.path, router=self.router, dim=dim,
         )
+        out._filled_shards = filled
         # keep the operating-point dim resolvable for in-memory chains
         # (any source relation works, every segment shares the dim) —
         # but only while dim is still unresolved, so append chains
@@ -1098,7 +1110,7 @@ class HnswIndex:
     def load(cls, spark: SparkSession, path: str) -> "HnswIndex":
         with open(os.path.join(path, "meta.json")) as fh:
             meta = json.load(fh)
-        return cls(
+        idx = cls(
             spark.read.parquet(os.path.join(path, "graph")),
             meta["nshards"],
             meta["metric"],
@@ -1108,6 +1120,8 @@ class HnswIndex:
             router=meta.get("router") or None,
             dim=meta.get("dim"),
         )
+        idx._filled_shards = meta.get("shards")  # None: written before it was recorded
+        return idx
 
     def _probe_dim(self) -> int | None:
         """Operating-point dim for host calibration, resolved WITHOUT
@@ -1317,6 +1331,12 @@ class HnswIndex:
         shards_rel = spark.range(self.nshards).select(
             F.col("id").cast("int").alias("_shard")
         )
+        if self._filled_shards is not None and len(self._filled_shards) < self.nshards:
+            # a shard without docs would give the cogroup an empty
+            # graph side, which crashes PySpark's Arrow -> pandas step
+            # for the nested adjacency column before per_shard runs:
+            # send queries only to shards that hold docs
+            shards_rel = shards_rel.filter(F.col("_shard").isin(self._filled_shards))
         # parallelize the nshards fan-out when the query relation
         # arrives under-partitioned (same single-task-probe fix as the
         # IVF distributed join; metadata-only, no-op at scale)

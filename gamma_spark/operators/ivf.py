@@ -10,7 +10,8 @@ Spark design:
 
 - **Train**: MLlib KMeans over a bounded sample (the reference also
   trains on a bounded prefix, `search/gamma_engine.cc:659-664`), seeded
-  for determinism.
+  for determinism. The training helpers here are shared by every IVF
+  model (IVFPQ, IVFSQ8, BINARYIVF).
 - **Assign**: one vectorized ``mapInPandas`` pass computes
   ``cluster_id = argmin ||v - c||`` against the broadcast centroid
   matrix (numpy matmul per Arrow batch) — no shuffle.
@@ -19,10 +20,9 @@ Spark design:
   buckets — gamma's nprobe pruning becomes **Parquet partition
   pruning** (SURVEY O5). At 100 TB each bucket is further split by
   Parquet's own file sizing; no bucket ever needs to fit in memory.
-- **Search**: nearest-nprobe-centroids per query is a driver-side
-  numpy matmul over the (tiny) query batch x centroid matrix; probed
-  ``cluster_id`` literals turn into a pushed-down ``isin`` filter; the
-  exact scan within the pruned buckets reuses the FLAT kernels.
+- **Search**: the shared IVF skeleton (:mod:`.ivfsearch`) with the FLAT
+  scorer — driver-side probe + pruned scan for request batches, the
+  cogroup join for query relations of any size.
 
 With ``nprobe == ncentroids`` the plan degenerates to exact brute force
 — that degeneracy is our oracle-checkable configuration (SURVEY §5).
@@ -30,31 +30,23 @@ With ``nprobe == ncentroids`` the plan degenerates to exact brute force
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from gamma_spark.functions.vector import stack_vectors
+from gamma_spark.operators.ivfsearch import (
+    FLOAT_METRICS,
+    IvfBase,
+    _presented_to_kernel_band,
+    centroid_hierarchy,
+    scorer_for,
+)
 
 
 DEFAULT_NCENTROIDS = 256  # reference test default (`tests/test.h:51-66`)
 DEFAULT_NPROBE = 10
-
-#: byte-wise popcount LUT (numpy < 2.0 has no bitwise_count); an int64
-#: xor matrix viewed as uint8 popcounts in one gather + sum
-_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-
-
-def _popcount64_matrix(x: np.ndarray) -> np.ndarray:
-    """Popcount of each element of an int64 matrix, as float64."""
-    b = np.ascontiguousarray(x).view(np.uint8)
-    return (
-        _POP8[b].reshape(*x.shape, 8).sum(axis=-1, dtype=np.int64).astype(np.float64)
-    )
-
 
 def kmeans_lloyd_np(data: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
     """Deterministic Lloyd k-means over an in-memory sample (the
@@ -147,90 +139,6 @@ def _estimate_rows(
     return max(1, size // (8 * dim + 24))
 
 
-def _presented_to_kernel_band(
-    min_score: float | None, max_score: float | None, squared: bool
-) -> tuple[float | None, float | None]:
-    """Map an F8 score band from the *presented* score scale to the
-    kernel's internal scale. ``squared=True`` when the kernel holds
-    pre-sqrt L2 while the band (like the final score) is on the sqrt
-    scale — sqrt is monotone on [0, inf) so the band maps to its
-    squares; a negative max on the sqrt scale matches nothing."""
-    if not squared:
-        return min_score, max_score
-    if max_score is not None and max_score < 0:
-        return float("inf"), float("-inf")  # empty band
-    lo = None if min_score is None else max(min_score, 0.0) ** 2
-    hi = None if max_score is None else float(max_score) ** 2
-    return lo, hi
-
-
-def make_exec_probe(
-    cents: np.ndarray,
-    nprobe: int,
-    salts: int,
-    probe_col: str = "_qvec",
-    exec_chunk_cells: int = 8_000_000,
-):
-    """mapInPandas generator fanning each query row out to its nprobe
-    nearest clusters x salts shards — the ONE executor-side coarse
-    probe shared by the IVF and PQ distributed joins (the PQ twin had
-    re-grown an unchunked copy of this kernel).
-
-    The per-worker probe matrix is bounded: 8M float64 cells = 64 MB —
-    smaller than the driver's PROBE_CHUNK_CELLS because all workers
-    allocate concurrently (the hnsw.scan lesson, SCALING.md r7); at
-    131k centroids an unchunked 10k-row Arrow batch would transiently
-    hold ~10 GB per worker. A probe_col other than '_qvec' (the
-    BINARYIVF float-probe seam) is dropped from the output before the
-    shuffle."""
-    # the full-probe branch below emits len(cents) cluster ids per row,
-    # so fan must never exceed that — the invariant lives with the
-    # kernel, not in each caller (an unclamped nprobe would surface as
-    # a pandas length mismatch deep in the executor)
-    nprobe = min(int(nprobe), len(cents))
-    cnorm = (cents * cents).sum(axis=1)
-
-    def probe(batches):
-        buf = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = stack_vectors(
-                pdf[probe_col].to_numpy(), "coarse probe (queries)"
-            ).astype(np.float64)
-            if nprobe < len(cents):
-                rows = max(1, exec_chunk_cells // max(1, len(cents)))
-                parts = []
-                for lo in range(0, len(mat), rows):
-                    mb = mat[lo : lo + rows]
-                    if buf is None or buf.shape != (len(mb), len(cents)):
-                        buf = np.empty((len(mb), len(cents)))
-                    np.matmul(mb, cents.T, out=buf)
-                    buf *= -2.0
-                    buf += cnorm[None, :]
-                    parts.append(
-                        np.argpartition(buf, nprobe - 1, axis=1)[:, :nprobe]
-                    )
-                part = np.concatenate(parts, axis=0)
-            else:
-                part = np.broadcast_to(
-                    np.arange(len(cents)), (len(mat), len(cents))
-                )
-            fan = nprobe * salts
-            out = pdf.iloc[np.repeat(np.arange(len(pdf)), fan)].copy()
-            out["cluster_id"] = (
-                np.repeat(part, salts, axis=1).ravel().astype(np.int32)
-            )
-            out["_salt"] = np.tile(
-                np.arange(salts, dtype=np.int32), len(pdf) * nprobe
-            )
-            if probe_col != "_qvec":
-                out = out.drop(columns=[probe_col])
-            yield out
-
-    return probe
-
-
 def _train_centroids(
     docs: DataFrame,
     doc_vec: str,
@@ -265,33 +173,10 @@ def _train_centroids(
     )
     if total is None:
         total = docs.count()
-    sample = docs.select(F.col(doc_vec).cast("array<double>").alias("_v"))
     sampled = total > sample_size
-    if sampled:
-        sample = sample.sample(
-            fraction=min(1.0, 1.5 * sample_size / total), seed=seed
-        )
-    # the limit both enforces the bound and insures against a low
-    # estimate (it is a no-op when the stream is already smaller)
-    sample = sample.limit(sample_size)
 
     if min(total, sample_size) <= LOCAL_TRAIN_MAX:
-        # Arrow-path collection (toPandas) is ~10x faster than row
-        # deserialization for array columns
-        pdf = sample.toPandas()
-        if pdf.empty:
-            # fraction sampling under an overestimated row count can
-            # return nothing; fall back to a plain bounded take
-            pdf = (
-                docs.select(F.col(doc_vec).cast("array<double>").alias("_v"))
-                .limit(sample_size)
-                .toPandas()
-            )
-        if pdf.empty:
-            raise ValueError("cannot train centroids on an empty relation")
-        data = stack_vectors(
-            pdf["_v"].to_numpy(), "centroid training sample"
-        ).astype(np.float64)
+        data = _collect_sample(docs, doc_vec, sample_size, total, seed, "centroids")
         if sample_out is not None:
             sample_out["data"] = data
             # provably every row: no sampling, limit not binding (an
@@ -303,9 +188,63 @@ def _train_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    sample = _sample_vectors(docs, doc_vec, sample_size, total, seed)
     feat = sample.select(array_to_vector(F.col("_v")).alias("features"))
     model = KMeans(k=ncentroids, seed=seed, initMode="random", maxIter=15).fit(feat)
     return np.asarray(model.clusterCenters(), dtype=np.float64)
+
+
+def _sample_vectors(
+    docs: DataFrame, doc_vec: str, size: int, total: int | None, seed: int
+) -> DataFrame:
+    """A seeded sample of at most ``size`` vectors as ``_v
+    array<double>``. The limit both enforces the bound and insures
+    against a low ``total`` estimate (a no-op when the stream is
+    already smaller)."""
+    sample = docs.select(F.col(doc_vec).cast("array<double>").alias("_v"))
+    if total is not None and total > size:
+        sample = sample.sample(fraction=min(1.0, 1.5 * size / total), seed=seed)
+    return sample.limit(size)
+
+
+def _collect_sample(
+    docs: DataFrame, doc_vec: str, size: int, total: int | None, seed: int, what: str
+) -> np.ndarray:
+    """:func:`_sample_vectors` collected as a float64 matrix (Arrow-path
+    ``toPandas`` is ~10x faster than row deserialization for array
+    columns) for training ``what``."""
+    pdf = _sample_vectors(docs, doc_vec, size, total, seed).toPandas()
+    if pdf.empty:
+        # fraction sampling under an overestimated row count can
+        # return nothing; fall back to a plain bounded take
+        pdf = _sample_vectors(docs, doc_vec, size, None, seed).toPandas()
+    if pdf.empty:
+        raise ValueError(f"cannot train {what} on an empty relation")
+    return stack_vectors(pdf["_v"].to_numpy(), f"{what} training sample").astype(
+        np.float64
+    )
+
+
+def _write_index(
+    rel: DataFrame, path: str, table: str, arrays: dict, meta: dict
+) -> DataFrame:
+    """Persist a cluster-assigned relation partitioned by
+    ``cluster_id`` under ``path/table``, the quantizer arrays as
+    ``<name>.npy`` and ``meta.json``; returns the re-read relation (a
+    bare scan, no Python stage)."""
+    from gamma_spark.io_util import atomic_write_json
+
+    # co-locate each inverted list before the partitioned write:
+    # without this, every one of T tasks writes into every one of C
+    # cluster dirs -> T*C tiny files; with it, file count ~ C (Parquet
+    # still splits oversized lists by maxRecordsPerFile)
+    rel.repartition("cluster_id").write.mode("overwrite").partitionBy(
+        "cluster_id"
+    ).parquet(os.path.join(path, table))
+    for name, arr in arrays.items():
+        np.save(os.path.join(path, f"{name}.npy"), arr)
+    atomic_write_json(os.path.join(path, "meta.json"), meta)
+    return rel.sparkSession.read.parquet(os.path.join(path, table))
 
 
 def assign_clusters(
@@ -336,10 +275,11 @@ def assign_clusters(
     return docs.mapInPandas(assign, schema=schema)
 
 
-class IvfFlatIndex:
+class IvfFlatIndex(IvfBase):
     """RetrievalModel analogue (`index/retrieval_model.h:218-310`):
-    build() trains + materializes the index table, search() executes the
-    nprobe-pruned exact scan."""
+    build() trains + materializes the index table; search() and
+    knn_join_distributed() run the shared IVF skeleton with the FLAT
+    scorer (HAMMING: the popcount scorer)."""
 
     name = "IVFFLAT"
 
@@ -347,8 +287,6 @@ class IvfFlatIndex:
         self.centroids = centroids
         self.index_df = index_df
         self.path = path
-        self._hierarchy: tuple[np.ndarray, np.ndarray] | None = None
-        self._hnsw_probe = None  # set by enable_hnsw_probe()
         self._src_docs: DataFrame | None = None  # set by build() (in-memory)
 
     # -- build -----------------------------------------------------------
@@ -366,25 +304,13 @@ class IvfFlatIndex:
         assigned = assign_clusters(docs, centroids, doc_vec)
         src_docs = docs
         if path:
-            # co-locate each inverted list before the partitioned write:
-            # without this, every one of T tasks writes into every one of
-            # C cluster dirs -> T*C tiny files; with it, file count ~ C
-            # (Parquet still splits oversized lists by maxRecordsPerFile)
-            assigned.repartition("cluster_id").write.mode("overwrite").partitionBy(
-                "cluster_id"
-            ).parquet(os.path.join(path, "index"))
-            np.save(os.path.join(path, "centroids.npy"), centroids)
-            from gamma_spark.io_util import atomic_write_json
-
-            atomic_write_json(
-                os.path.join(path, "meta.json"),
+            assigned = _write_index(
+                assigned, path, "index", {"centroids": centroids},
                 {"model": cls.name, "ncentroids": len(centroids), "doc_vec": doc_vec},
             )
-            spark = docs.sparkSession
-            assigned = spark.read.parquet(os.path.join(path, "index"))
-            # a path-backed index re-reads its own parquet (bare scan,
-            # no Python stage) — the written index IS the cheap vector
-            # source, so don't pin the build-time source plan alive
+            # a path-backed index re-reads its own parquet — the written
+            # index IS the cheap vector source, so don't pin the
+            # build-time source plan alive
             src_docs = None
         idx = cls(centroids, assigned, path)
         # rescore-vector source for in-memory builds: index_df carries a
@@ -400,17 +326,7 @@ class IvfFlatIndex:
         centroids = np.load(os.path.join(path, "centroids.npy"))
         return cls(centroids, spark.read.parquet(os.path.join(path, "index")), path)
 
-    # -- search ----------------------------------------------------------
-    #: cap on the (chunk × ncentroids) distance matrix materialized per
-    #: probe chunk: 32M float64 cells = 256 MB. At the reference's
-    #: production shape (2048 centroids) that is ~16k queries per chunk;
-    #: at 65k centroids ~512 queries per chunk. Centroids themselves are
-    #: (ncentroids × d) driver-resident — ~32 MB at 65k×64, the ceiling
-    #: documented in docs/SCALING.md; past that the coarse quantizer
-    #: itself should become a (tiny) distributed kNN over a centroid
-    #: relation.
-    PROBE_CHUNK_CELLS = 32_000_000
-
+    # -- coarse quantizer --------------------------------------------------
     def enable_hnsw_probe(
         self, m: int = 16, ef_construction: int = 100, ef_search: int = 64,
         seed: int = 42,
@@ -430,71 +346,19 @@ class IvfFlatIndex:
         self._hnsw_probe = (g, int(ef_search))
         return self
 
-    def probe_clusters(self, qmat: np.ndarray, nprobe: int) -> np.ndarray:
-        """(Q, nprobe) nearest centroid ids per query — driver-side numpy
-        over the query batch (gamma: quantizer->search,
-        `gamma_index_ivfpq.cc:561`), chunked over queries so the
-        distance matrix never exceeds PROBE_CHUNK_CELLS regardless of
-        batch size × ncentroids (VERDICT r2 #9).
+    def build_hierarchy(self, nsuper: int | None = None, seed: int = 42) -> "IvfFlatIndex":
+        """Cluster the centroids themselves into ``nsuper`` (default
+        sqrt(ncentroids)) super-centroids. With a hierarchy, the
+        distributed join's probe broadcasts only the (nsuper x d) super
+        matrix and streams the full centroid set as a *relation* — the
+        executor/driver footprint drops from O(ncentroids) to
+        O(sqrt(ncentroids)), raising the practical ceiling from ~65k
+        centroids (docs/SCALING.md) to ~4B. The same two-level idea as
+        faiss' IMI / SPANN partitioning, expressed as one extra cogroup."""
+        self._hierarchy = centroid_hierarchy(self.centroids, nsuper, seed)
+        return self
 
-        With :meth:`enable_hnsw_probe` and a genuinely pruning nprobe,
-        the assignment goes through the centroid graph instead (the
-        degenerate nprobe == ncentroids case stays brute-force exact —
-        that is the oracle configuration)."""
-        cents = self.centroids
-        hp = getattr(self, "_hnsw_probe", None)
-        if hp is not None and nprobe < len(cents):
-            g, ef = hp
-            pos, _ = g.search(qmat, k=nprobe, ef=max(ef, nprobe))
-            # pad the (rare) under-filled rows with the brute answer —
-            # via the brute helper directly, NOT by temporarily nulling
-            # self._hnsw_probe: that mutation raced concurrent searches
-            # on the same index (thread B would silently take the
-            # brute O(Q*C) path, or see the field restored mid-flight)
-            if (pos < 0).any():
-                bad = np.flatnonzero((pos < 0).any(axis=1))
-                pos[bad] = self._probe_brute(qmat[bad], nprobe)
-            return pos
-        return self._probe_brute(qmat, nprobe)
-
-    def _probe_brute(self, qmat: np.ndarray, nprobe: int) -> np.ndarray:
-        """Exact chunked centroid assignment (the non-graph probe)."""
-        cents = self.centroids
-        nprobe = min(nprobe, len(cents))
-        chunk = max(1, self.PROBE_CHUNK_CELLS // max(1, len(cents)))
-        cent_sq = (cents * cents).sum(axis=1)[None, :]
-        out = np.empty((len(qmat), nprobe), dtype=np.int64)
-        buf = None
-        for lo in range(0, len(qmat), chunk):
-            qc = qmat[lo : lo + chunk]
-            # one reusable buffer + in-place accumulation (bit-identical
-            # to the three-allocation expression; SCALING.md r7)
-            if buf is None or buf.shape != (len(qc), len(cents)):
-                buf = np.empty((len(qc), len(cents)))
-            np.matmul(qc, cents.T, out=buf)
-            buf *= -2.0
-            buf += (qc * qc).sum(axis=1)[:, None]
-            buf += cent_sq
-            d = buf
-            if nprobe < len(cents):
-                # argpartition bounds the sort to nprobe instead of
-                # ncentroids·log(ncentroids) per query
-                part = np.argpartition(d, nprobe - 1, axis=1)[:, :nprobe]
-                order = np.argsort(
-                    np.take_along_axis(d, part, axis=1), axis=1, kind="stable"
-                )
-                out[lo : lo + len(qc)] = np.take_along_axis(part, order, axis=1)
-            else:
-                out[lo : lo + len(qc)] = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-        return out
-
-    #: above this query count the BLAS scan kernel beats the expression
-    #: join+window path (measured: 2048 queries x 200k docs, join 131s
-    #: vs scan 4s; even at 64 queries x 1M docs join loses 26s vs ~6s).
-    #: The join path's value is bit-reproducibility vs the SQL oracle,
-    #: needed only for small correctness batches.
-    SCAN_STRATEGY_MIN_Q = 16
-
+    # -- search ----------------------------------------------------------
     def search(
         self,
         docs: DataFrame,  # unused: index_df already carries the docs; kept for protocol
@@ -511,378 +375,20 @@ class IvfFlatIndex:
         query_id: str = "qid",
         query_vec: str = "qvec",
         probe_vec: str | None = None,
-        _precomputed: tuple | None = None,
-        doc_decode=None,
     ) -> DataFrame:
-        """``probe_vec`` names the float query column used for centroid
-        probing when ``query_vec`` itself isn't in centroid space (the
-        BINARYIVF case scores packed signatures but probes floats).
-
+        """The request path (:meth:`IvfBase._search_request`).
         ``strategy``: 'join' = Catalyst expression scoring + window
         top-k (bit-reproducible vs the SQL oracle — the correctness
         path); 'scan' = per-cluster BLAS kernel with partition-local
         heaps (the throughput path for large query batches); 'auto'
-        picks by query count.
-
-        ``doc_decode`` (private seam, compressed tiers): a numpy
-        callable mapping the raw ``doc_vec`` column values of a batch
-        to the float64 score matrix — lets IVFSQ8 ship 1-byte codes
-        into the scan kernel and dequantize at scoring instead of
-        paying a separate decode Python pass (guide §4). Scan-path
-        only; the Catalyst join path scores real columns.
-        """
-        spark = self.index_df.sparkSession
-        if strategy == "scan" and metric.upper() not in ("IP", "L2", "COSINE"):
-            # an explicit 'scan' from user retrieval_params must fail
-            # cleanly: the BLAS kernel has no HAMMING branch and scores
-            # the float probe vectors, not the packed signatures — it
-            # would crash (or silently mis-score) deep in the executor
-            raise ValueError(
-                f"strategy='scan' supports IP/L2/COSINE, not "
-                f"{metric.upper()}; use strategy='join' (the 'auto' "
-                "default already routes non-float metrics there)"
-            )
-        if probe_vec is not None and metric.upper() in ("IP", "L2", "COSINE"):
-            # the scan kernel scores qmat, which is built from
-            # probe_vec — for a float metric that silently scores the
-            # PROBE column instead of the query vectors. Only the join
-            # path separates the two; force it (the combination is
-            # reachable through the public API even though only
-            # BINARYIVF/HAMMING uses probe_vec today).
-            if strategy == "scan":
-                raise ValueError(
-                    "strategy='scan' cannot combine probe_vec with a "
-                    "float metric (the kernel would score the probe "
-                    "column); use strategy='join'"
-                )
-            strategy = "join"
-        if _precomputed is not None:
-            # private seam for delegating wrappers (IvfSq8Index.search)
-            # that already collected the batch and probed the centroids
-            # for their own partition prune — re-collecting and
-            # re-running the O(Q·ncentroids) probe here doubled the
-            # driver cost of every delegated search. The tuple is
-            # (collected (id, vec[, probe_vec]) rows, float64 probe
-            # matrix, (Q, nprobe) probe ids).
-            qrows, qmat, probes = _precomputed
-        else:
-            qrows = queries.select(
-                query_id, query_vec, probe_vec or query_vec
-            ).collect()
-            qmat = np.asarray([r[2] for r in qrows], dtype=np.float64)
-            probes = self.probe_clusters(qmat, nprobe)
-        qids = [int(r[0]) for r in qrows]
-
-        # literal isin over the union of probed clusters prunes parquet
-        # partitions at scan time (partition pruning / pushed filter);
-        # the per-query restriction happens in the pairs join / kernel mask.
-        wanted = sorted({int(c) for row in probes for c in row})
-        pruned = self.index_df
-        if len(wanted) < len(self.centroids):
-            pruned = pruned.filter(F.col("cluster_id").isin(wanted))
-        if predicate is not None:
-            pruned = pruned.filter(predicate)
-        if "_deleted" in pruned.columns:
-            pruned = pruned.filter(~F.col("_deleted"))
-
-        if strategy == "scan" or (
-            strategy == "auto"
-            and len(qids) > self.SCAN_STRATEGY_MIN_Q
-            and metric.upper() in ("IP", "L2", "COSINE")
-        ):
-            return self._search_scan(
-                pruned, qids, qmat, probes, k, metric, doc_vec,
-                min_score, max_score, l2_sqrt, doc_decode=doc_decode,
-            )
-        if doc_decode is not None:
-            # the join path scores doc_vec with a Catalyst expression —
-            # it cannot consume an encoded column (caller bug: the
-            # compressed-tier wrapper must decode before delegating here)
-            raise ValueError("doc_decode requires the scan strategy")
-
-        # (qid, cluster_id) probe pairs — broadcast side of the pruning join
-        pairs = spark.createDataFrame(
-            [(q, int(c)) for q, row in zip(qids, probes) for c in row],
-            "qid long, cluster_id int",
+        picks by query count. ``probe_vec`` names the float query
+        column used for centroid probing when ``query_vec`` itself
+        isn't in centroid space (BINARYIVF)."""
+        return self._search_request(
+            self.index_df, queries, scorer_for(metric, doc_vec, l2_sqrt),
+            k, nprobe, predicate, query_id=query_id, query_vec=query_vec,
+            probe_vec=probe_vec, strategy=strategy, band=(min_score, max_score),
         )
-        candidates = pruned.join(F.broadcast(pairs), on="cluster_id", how="inner")
-        # exact scoring within probed lists == FLAT on the candidate set,
-        # restricted per query: score rows where (qid, doc) candidate pair
-        from gamma_spark.functions import vector as V
-        from gamma_spark.operators.topk import topk
-
-        # rebuild the query relation from the rows already collected for
-        # probing — avoids a second evaluation of the queries plan
-        from pyspark.sql.types import StructField, StructType
-
-        qschema = StructType(
-            [
-                StructField("_qid2", queries.schema[query_id].dataType),
-                StructField("_qvec", queries.schema[query_vec].dataType),
-            ]
-        )
-        qdf = spark.createDataFrame(
-            [(r[0], r[1]) for r in qrows], schema=qschema
-        )
-        scored = candidates.join(
-            F.broadcast(qdf), on=F.col("qid") == F.col("_qid2"), how="inner"
-        ).select(
-            "qid",
-            F.col("_docid").alias("_docid"),
-            V.score(metric, doc_vec, "_qvec", l2_sqrt=l2_sqrt).alias("score"),
-        )
-        if min_score is not None:
-            scored = scored.filter(F.col("score") >= min_score)
-        if max_score is not None:
-            scored = scored.filter(F.col("score") <= max_score)
-        return topk(
-            scored, ["qid"], "score", k, ascending=V.metric_ascending(metric),
-            tiebreak_cols=["_docid"],
-        )
-
-    def _search_scan(
-        self, pruned: DataFrame, qids, qmat, probes, k, metric, doc_vec,
-        min_score, max_score, l2_sqrt, doc_decode=None,
-    ) -> DataFrame:
-        """BLAS scan over the pruned buckets: each Arrow batch (usually a
-        single inverted list, thanks to the cluster-partitioned layout)
-        computes a submatrix product against only the queries that
-        probed that cluster, feeding partition-local top-k heaps. Same
-        shuffle profile as the FLAT scan kernel: k rows per (query,
-        partition), independent of corpus size."""
-        from gamma_spark.functions import vector as V
-        from gamma_spark.operators.topk import merge_running_topk, topk
-
-        metric_u = metric.upper()
-        asc = V.metric_ascending(metric_u)
-        qarr = np.asarray(qids, dtype=np.int64)
-        pmask = np.zeros((len(qids), len(self.centroids)), dtype=bool)
-        for qi, row in enumerate(probes):
-            pmask[qi, row] = True
-        if metric_u == "COSINE":
-            qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
-        else:
-            qn = qmat
-        worst = np.inf if asc else -np.inf
-
-        def scan(batches):
-            best_s = np.full((len(qarr), k), worst)
-            best_i = np.full((len(qarr), k), -1, dtype=np.int64)
-            seen = 0
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                seen += len(pdf)
-                raw = pdf[doc_vec].to_numpy()
-                mat = (
-                    doc_decode(raw)
-                    if doc_decode is not None
-                    else np.stack(raw).astype(np.float64)
-                )
-                ids = pdf["_docid"].to_numpy(dtype=np.int64)
-                clus = pdf["cluster_id"].to_numpy(dtype=np.int64)
-                for c in np.unique(clus):
-                    dmask = clus == c
-                    qsel = np.flatnonzero(pmask[:, c])
-                    if not len(qsel):
-                        continue
-                    sub = mat[dmask]
-                    sub_ids = ids[dmask]
-                    qs = qn[qsel]
-                    if metric_u == "IP":
-                        s = qs @ sub.T  # (q', b')
-                    elif metric_u == "COSINE":
-                        subn = sub / np.maximum(
-                            np.linalg.norm(sub, axis=1, keepdims=True), 1e-30
-                        )
-                        s = qs @ subn.T
-                    else:  # L2
-                        s = (
-                            (qs * qs).sum(axis=1)[:, None]
-                            - 2.0 * (qs @ sub.T)
-                            + (sub * sub).sum(axis=1)[None, :]
-                        )
-                        np.maximum(s, 0.0, out=s)
-                        if l2_sqrt:
-                            np.sqrt(s, out=s)
-                    if min_score is not None:
-                        s = np.where(s >= min_score, s, worst)
-                    if max_score is not None:
-                        s = np.where(s <= max_score, s, worst)
-                    # merge into the running top-k — shared kernel
-                    # (operators/topk.merge_running_topk, r9): dual-pivot
-                    # tie detection + smallest-docid lexsort repair
-                    new_s, new_i = merge_running_topk(
-                        best_s[qsel],
-                        best_i[qsel],
-                        s,
-                        np.broadcast_to(sub_ids, (len(qsel), len(sub_ids))),
-                        k,
-                        asc,
-                    )
-                    best_s[qsel] = new_s
-                    best_i[qsel] = new_i
-            if not seen:
-                return
-            valid = (best_i.ravel() >= 0) & np.isfinite(best_s.ravel())
-            import pandas as pd
-
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qarr, k)[valid],
-                    "_docid": best_i.ravel()[valid],
-                    "score": best_s.ravel()[valid],
-                }
-            )
-
-        partials = pruned.select("_docid", "cluster_id", doc_vec).mapInPandas(
-            scan, schema="qid long, _docid long, score double"
-        )
-        return topk(partials, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"])
-
-    # -- corpus-scale kNN join (no driver-side query collect) ------------
-    #: bound on the (query-chunk x cluster) score matrix inside the
-    #: cogroup kernel: 8M float64 cells = 64 MB per task
-    COGROUP_CHUNK_CELLS = 8_000_000
-
-    # -- two-level coarse quantizer (lifts the 65k-centroid ceiling) -----
-    def build_hierarchy(self, nsuper: int | None = None, seed: int = 42) -> "IvfFlatIndex":
-        """Cluster the centroids themselves into ``nsuper`` (default
-        sqrt(ncentroids)) super-centroids. With a hierarchy, the
-        distributed join's probe broadcasts only the (nsuper x d) super
-        matrix and streams the full centroid set as a *relation* — the
-        executor/driver footprint drops from O(ncentroids) to
-        O(sqrt(ncentroids)), raising the practical ceiling from ~65k
-        centroids (docs/SCALING.md) to ~4B. The same two-level idea as
-        faiss' IMI / SPANN partitioning, expressed as one extra cogroup."""
-        c = self.centroids
-        nsuper = nsuper or max(1, int(np.sqrt(len(c))))
-        sup = kmeans_lloyd_np(c.astype(np.float64), nsuper, seed)
-        d = -2.0 * (c @ sup.T) + (sup * sup).sum(axis=1)[None, :]
-        self._hierarchy = (sup, d.argmin(axis=1).astype(np.int32))
-        return self
-
-    def _hier_probe(
-        self,
-        probe_rel: DataFrame,
-        join_rel: DataFrame,
-        probe_type: str,
-        nprobe: int,
-        wsuper: int,
-        salts: int,
-    ) -> DataFrame:
-        """Relation-based multi-probe: super-probe (map-only, broadcast
-        O(sqrt C)), per-super cogroup against the centroid relation
-        (exact child distances, top-nprobe per (query, super)), global
-        top-nprobe per query, then reattach the scoring columns from
-        ``join_rel`` by qid. ``probe_rel`` is (qid, _pv float vector) —
-        for BINARYIVF the probe vector differs from the scored
-        signature, hence the split. Returns the same (qid, _qvec,
-        cluster_id, _salt) relation the flat probe emits, so everything
-        downstream is shared.
-
-        The centroid relation is created from the trained numpy matrix
-        here; a fully distributed build (MLlib at >LOCAL_TRAIN_MAX
-        samples) would hand it over as a DataFrame directly — the probe
-        itself never materializes all centroids in one place."""
-        from gamma_spark.operators.topk import topk
-
-        spark = self.index_df.sparkSession
-        if self._hierarchy is None:
-            self.build_hierarchy()
-        sup, child_super = self._hierarchy
-        nsuper = len(sup)
-        wsuper = max(1, min(wsuper, nsuper))
-        cents = self.centroids
-        crel = spark.createDataFrame(
-            [
-                (int(child_super[i]), i, [float(x) for x in cents[i]])
-                for i in range(len(cents))
-            ],
-            "super_id int, cluster_id int, _cvec array<double>",
-        )
-        supn = (sup * sup).sum(axis=1)
-        chunk_cells = self.COGROUP_CHUNK_CELLS
-
-        def sprobe(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                mat = np.stack(pdf["_pv"].to_numpy()).astype(np.float64)
-                dd = -2.0 * (mat @ sup.T) + supn[None, :]
-                if wsuper < nsuper:
-                    part = np.argpartition(dd, wsuper - 1, axis=1)[:, :wsuper]
-                else:
-                    part = np.broadcast_to(np.arange(nsuper), (len(mat), nsuper))
-                out = pdf.iloc[np.repeat(np.arange(len(pdf)), part.shape[1])].copy()
-                out["super_id"] = part.ravel().astype(np.int32)
-                yield out
-
-        qsup = probe_rel.mapInPandas(
-            sprobe, schema=f"qid long, _pv {probe_type}, super_id int"
-        )
-        npl = nprobe
-
-        def per_super(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-            if qpdf.empty or cpdf.empty:
-                return pd.DataFrame(
-                    {"qid": [], "cluster_id": [], "_cdist": []}
-                ).astype({"qid": "int64", "cluster_id": "int32", "_cdist": "float64"})
-            order = np.argsort(cpdf["cluster_id"].to_numpy(), kind="stable")
-            cm = np.stack(cpdf["_cvec"].to_numpy())[order].astype(np.float64)
-            cid = cpdf["cluster_id"].to_numpy()[order]
-            cn = (cm * cm).sum(axis=1)
-            qm = np.stack(qpdf["_pv"].to_numpy()).astype(np.float64)
-            qids = qpdf["qid"].to_numpy(dtype=np.int64)
-            kk = min(npl, len(cid))
-            chunk = max(1, chunk_cells // max(1, len(cid)))
-            outs = []
-            for lo in range(0, len(qm), chunk):
-                qc = qm[lo : lo + chunk]
-                # -2 q·c + |c|^2: the per-query-constant |q|^2 term is
-                # dropped — rankings are comparable ACROSS supers since
-                # the expression doesn't depend on super membership
-                dd = -2.0 * (qc @ cm.T) + cn[None, :]
-                if len(cid) > kk:
-                    pre = np.argpartition(dd, kk - 1, axis=1)[:, :kk]
-                else:
-                    pre = np.broadcast_to(
-                        np.arange(len(cid)), (len(qc), len(cid))
-                    ).copy()
-                sc = np.take_along_axis(dd, pre, axis=1)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "qid": np.repeat(qids[lo : lo + chunk], pre.shape[1]),
-                            "cluster_id": cid[pre.ravel()].astype(np.int32),
-                            "_cdist": sc.ravel(),
-                        }
-                    )
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        # pin the super-probe kernel fan-out (session.partition_for_kernel)
-        from gamma_spark.session import partition_for_kernel
-
-        cand = (
-            partition_for_kernel(qsup, ["super_id"], nsuper)
-            .groupby("super_id")
-            .cogroup(
-                partition_for_kernel(crel, ["super_id"], nsuper)
-                .groupby("super_id")
-            )
-            .applyInPandas(per_super, schema="qid long, cluster_id int, _cdist double")
-        )
-        pairs = topk(
-            cand, ["qid"], "_cdist", nprobe, ascending=True, rank_col=None,
-            tiebreak_cols=["cluster_id"],
-        ).select("qid", "cluster_id")
-        if salts > 1:
-            srel = spark.range(salts).select(F.col("id").cast("int").alias("_salt"))
-            pairs = pairs.crossJoin(F.broadcast(srel))
-        else:
-            pairs = pairs.withColumn("_salt", F.lit(0))
-        return pairs.join(join_rel, on="qid", how="inner")
 
     def knn_join_distributed(
         self,
@@ -902,343 +408,42 @@ class IvfFlatIndex:
         hierarchical: bool = False,
         super_probe: int = 4,
         probe_vec: str | None = None,
-        doc_decode=None,
     ) -> DataFrame:
-        """kNN join where the *queries side is a DataFrame of any size* —
-        never collected to the driver. ``search()`` mirrors the
-        reference's request serving (the batch is bounded by contract,
-        `idl/fbs/request.fbs:28`); this is the corpus x corpus shape a
-        training-data pipeline needs (kNN graph over every document,
-        semantic-dedup neighbor mining, global similarity join) where
-        |Q| ~ |corpus| and a driver collect is impossible.
-
-        Plan (all distributed):
-
-        1. multi-probe map: ``mapInPandas`` against the broadcast
-           centroid matrix explodes each query into its ``nprobe``
-           nearest (cluster_id, qid, qvec) rows — map-only;
-        2. ONE shuffle of each side on ``cluster_id`` into a cogrouped
-           ``applyInPandas``: per cluster, a chunked BLAS scores the
-           cluster's queries against its inverted list and emits k rows
-           per (query, cluster), ties broken by ``_docid`` (docs sorted
-           by id + stable argsort);
-        3. global window top-k reduces nprobe*k to k per query.
-
-        Shuffled volume: |Q|·nprobe query rows + the probed lists +
-        |Q|·nprobe·k partials — independent of any driver memory. Skew:
-        one (cluster, salt) = one cogroup task; ``salts > 1`` splits
-        each inverted list into ``salts`` deterministic shards with the
-        queries replicated per shard (k per (query, shard) partials,
-        global top-k unchanged — per-shard top-k always contains the
-        shard's global-top-k members), so a pathologically hot cluster
-        costs salts× query-row duplication instead of one giant task.
+        """The distributed path (:meth:`IvfBase._join_distributed`):
+        the queries relation may be any size and is never collected —
+        ``search()`` mirrors the reference's bounded request batch
+        (`idl/fbs/request.fbs:28`), this is the corpus x corpus shape.
 
         ``rescore=True`` recomputes the final scores with the in-order
-        Catalyst expression (bit-identical to the SQL oracle) by joining
-        the kernel's candidates back to docs + queries — the global
-        top-k of the probed set is always contained in the union of
-        per-cluster top-ks, so with ``nprobe == ncentroids`` the result
-        equals exact brute force bit-for-bit.
-
-        ``min_score``/``max_score`` is gamma's F8 score band applied
-        *inside the scan before top-k* (`index/impl/gamma_index_flat.cc:
-        200-225` — pre-band, never a post-filter): banded-out docs never
-        occupy per-cluster top-k slots, so in-band docs are not
-        displaced. With ``rescore`` the band is re-applied to the exact
-        rescored values so the boundary is decided by the oracle-grade
-        expression.
-
-        ``doc_decode`` (private seam, compressed tiers): numpy callable
-        mapping the raw ``doc_vec`` batch values to the float64 score
-        matrix inside the cogroup kernel — IVFSQ8 shuffles 1-byte/dim
-        codes and dequantizes at scoring (float metrics, no rescore).
+        Catalyst expression (:func:`exact_rerank`, bit-identical to the
+        SQL oracle) — the global top-k of the probed set is always
+        contained in the union of per-cluster top-ks, so with
+        ``nprobe == ncentroids`` the result equals exact brute force
+        bit-for-bit, and the score band is re-decided on exact scores.
 
         ``hierarchical=True`` routes the probe through the two-level
-        quantizer (:meth:`build_hierarchy`): super-probe against a
-        broadcast O(sqrt C) matrix, per-super cogroup against the
-        centroid *relation*, global top-nprobe — no O(ncentroids)
-        structure on the driver or in any task closure. ``super_probe``
-        = supers visited per query; with ``super_probe >= nsuper`` the
-        probe set equals the flat probe exactly (property-tested).
-        """
-        from gamma_spark.functions import vector as V
-        from gamma_spark.operators.topk import topk
-
+        quantizer (:meth:`build_hierarchy`): no O(ncentroids) structure
+        on the driver or in any task closure. ``super_probe`` = supers
+        visited per query; with ``super_probe >= nsuper`` the probe set
+        equals the flat probe exactly (property-tested)."""
         metric_u = metric.upper()
-        if metric_u not in ("IP", "L2", "COSINE", "HAMMING"):
+        if metric_u not in FLOAT_METRICS + ("HAMMING",):
             raise ValueError(f"knn_join_distributed: unsupported metric {metric_u}")
-        if doc_decode is not None and (rescore or metric_u == "HAMMING"):
-            # rescore re-reads doc_vec with a Catalyst expression and
-            # the HAMMING branch consumes packed int64 signatures —
-            # neither can score an encoded column (compressed-tier
-            # wrappers do their own rescore against the raw relation)
-            raise ValueError(
-                "doc_decode supports float-metric kernel scoring only"
-            )
-        asc = V.metric_ascending(metric_u)
-        worst = np.inf if asc else -np.inf
-        cents = self.centroids
-        nprobe = min(nprobe, len(cents))
-        chunk_cells = self.COGROUP_CHUNK_CELLS
-
-        qsel = queries.select(
-            F.col(query_id).alias("qid"), F.col(query_vec).alias("_qvec")
+        # the kernel holds squared L2 when the rescore presents the sqrt
+        kernel_sqrt = l2_sqrt and not rescore
+        band = _presented_to_kernel_band(
+            min_score, max_score,
+            squared=(metric_u == "L2" and l2_sqrt and not kernel_sqrt),
         )
-        vec_type = qsel.schema["_qvec"].dataType.simpleString()
-
-        salts = max(1, int(salts))
-        # BINARYIVF probes with the float vector but scores the packed
-        # signature — carry both through the probe, drop the float one
-        # before the shuffle (search() has the same probe_vec seam)
-        probe_col = "_pv" if probe_vec is not None else "_qvec"
-        if probe_vec is not None:
-            psel = queries.select(
-                F.col(query_id).alias("qid"),
-                F.col(query_vec).alias("_qvec"),
-                F.col(probe_vec).alias("_pv"),
+        rerank = None
+        if rescore:
+            rerank = dict(
+                docs=self._src_docs, doc_vec=doc_vec, l2_sqrt=l2_sqrt,
+                min_score=min_score, max_score=max_score,
             )
-        else:
-            psel = qsel
-
-        probe = make_exec_probe(cents, nprobe, salts, probe_col=probe_col)
-
-        # The probe fans each query row out nprobe*salts ways before the
-        # cogroup shuffle, so a query relation arriving with too few
-        # partitions (one small parquet file, a broadcast crossJoin)
-        # serializes BOTH the fan-out compute and the fanned shuffle
-        # write into one task (measured: the single-task probe stage was
-        # 3.8 s of the 5.5 s 10k-query graph join, writing 57 MB of
-        # shuffle alone — guide §2.2 "fewer, larger map tasks" inverted:
-        # here the map stage had ONE task). ensure_parallelism is
-        # metadata-only and a no-op at scale, where scans already carry
-        # thousands of splits.
-        from gamma_spark.session import ensure_parallelism
-
-        psel = ensure_parallelism(psel, fanout=float(nprobe * salts))
-
-        if hierarchical:
-            prel = queries.select(
-                F.col(query_id).alias("qid"),
-                F.col(probe_vec if probe_vec is not None else query_vec).alias("_pv"),
-            )
-            ptype = prel.schema["_pv"].dataType.simpleString()
-            qprobed = self._hier_probe(prel, qsel, ptype, nprobe, super_probe, salts)
-        else:
-            qprobed = psel.mapInPandas(
-                probe, schema=f"qid long, _qvec {vec_type}, cluster_id int, _salt int"
-            )
-
-        pruned = self.index_df
-        if predicate is not None:
-            pruned = pruned.filter(predicate)
-        if "_deleted" in pruned.columns:
-            pruned = pruned.filter(~F.col("_deleted"))
-        dsel = pruned.select(
-            "cluster_id",
-            "_docid",
-            F.col(doc_vec).alias("_dvec"),
-            (F.pmod(F.xxhash64(F.col("_docid")), F.lit(salts)).cast("int")).alias(
-                "_salt"
-            ),
-        )
-        cogroup_keys = ["cluster_id", "_salt"]
-
-        want_sqrt = l2_sqrt and not rescore
-        # kernel-scale band: when the kernel holds squared L2 (rescore
-        # defers the sqrt) the presented-scale band maps to its squares
-        kmin, kmax = _presented_to_kernel_band(
-            min_score, max_score, squared=(metric_u == "L2" and l2_sqrt and not want_sqrt)
-        )
-        banded = kmin is not None or kmax is not None
-        # With rescore the kernel mask is only a PRE-filter — the band
-        # is re-decided on exact scores (below). The kernel's score
-        # arithmetic (BLAS matmul over float64, squared-L2 space)
-        # differs from the rescore expression's (elementwise Catalyst
-        # sum, sqrt space) in the last ulps, so a doc whose exact score
-        # sits ON the band boundary can be masked out here and never
-        # become a candidate — the exact filter cannot resurrect what
-        # the pre-filter dropped (hypothesis-found: symmetric L2 pairs
-        # put the test midpoint exactly on a score). Guard: widen the
-        # kernel mask by a float-noise epsilon, and expand the
-        # per-cluster candidate budget by the number of docs in the
-        # uncertainty window at the BETTER-scoring edge, so admitted
-        # epsilon-out docs can never displace certain in-band docs from
-        # the top-k candidate set. Without rescore the kernel decides
-        # finally and keeps the exact inclusive bounds (epsilon = 0).
-        guard_band = banded and rescore
-
-        def per_cluster(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            if qpdf.empty or dpdf.empty:
-                return pd.DataFrame({"qid": [], "_docid": [], "score": []}).astype(
-                    {"qid": "int64", "_docid": "int64", "score": "float64"}
-                )
-            # doc order by _docid: stable argsort over scores then breaks
-            # ties by docid, matching the oracle's (score, _docid) order
-            order = np.argsort(dpdf["_docid"].to_numpy(), kind="stable")
-            ids = dpdf["_docid"].to_numpy(dtype=np.int64)[order]
-            qids_all = qpdf["qid"].to_numpy(dtype=np.int64)
-            if metric_u == "HAMMING":
-                dmat = dpdf["_dvec"].to_numpy(dtype=np.int64)[order]
-                qall = qpdf["_qvec"].to_numpy(dtype=np.int64)
-            else:
-                draw = dpdf["_dvec"].to_numpy()
-                dmat = (
-                    doc_decode(draw)
-                    if doc_decode is not None
-                    else np.stack(draw).astype(np.float64)
-                )[order]
-                if metric_u == "COSINE":
-                    dmat = dmat / np.maximum(
-                        np.linalg.norm(dmat, axis=1, keepdims=True), 1e-30
-                    )
-                dnorm = (dmat * dmat).sum(axis=1)
-                qall = np.stack(qpdf["_qvec"].to_numpy()).astype(np.float64)
-                if metric_u == "COSINE":
-                    qall = qall / np.maximum(
-                        np.linalg.norm(qall, axis=1, keepdims=True), 1e-30
-                    )
-            kk = min(k, len(ids))
-            chunk = max(1, chunk_cells // max(1, len(ids)))
-            outs = []
-            for lo in range(0, len(qall), chunk):
-                qc = qall[lo : lo + chunk]
-                if metric_u == "HAMMING":
-                    s = _popcount64_matrix(qc[:, None] ^ dmat[None, :])
-                elif metric_u in ("IP", "COSINE"):
-                    s = qc @ dmat.T
-                else:
-                    s = (
-                        (qc * qc).sum(axis=1)[:, None]
-                        - 2.0 * (qc @ dmat.T)
-                        + dnorm[None, :]
-                    )
-                    np.maximum(s, 0.0, out=s)
-                    if want_sqrt:
-                        np.sqrt(s, out=s)
-                eps = 0.0
-                extra = 0
-                if guard_band and metric_u != "HAMMING":
-                    # epsilon ~ 1e-9 of the score magnitude scale —
-                    # orders above float64 matmul noise (~1e-13 rel),
-                    # orders below any real score spread
-                    if metric_u == "L2":
-                        scale = float((qc * qc).sum(axis=1).max() + dnorm.max())
-                    else:
-                        scale = float(
-                            np.sqrt(
-                                max(float((qc * qc).sum(axis=1).max()), 1e-30)
-                                * max(float(dnorm.max()), 1e-30)
-                            )
-                        )
-                    eps = 1e-9 * max(1.0, scale)
-                    better_edge = kmin if asc else kmax
-                    if better_edge is not None and np.isfinite(better_edge):
-                        extra = int(
-                            (np.abs(s - better_edge) <= eps).sum(axis=1).max()
-                        )
-                if kmin is not None:
-                    s = np.where(s >= kmin - eps, s, worst)
-                if kmax is not None:
-                    s = np.where(s <= kmax + eps, s, worst)
-                # select top-kk by (score, doc position); positions are
-                # docid-ordered, so this is exactly the oracle's
-                # (score, _docid) tie order. Fully vectorized (the
-                # former per-query Python lexsort loop was the kernel's
-                # hottest line at corpus-query counts — guide §4.2):
-                # lexsort over axis=1 orders every row by (score, col)
-                # in one C call; argpartition picks ARBITRARY members
-                # among ties straddling the ke boundary, so only rows
-                # where a straddle actually occurs pay the per-row
-                # repair (integer-valued metrics like HAMMING tie
-                # constantly and still repair; float scores almost
-                # never do; property-tested either way).
-                ke = min(kk + extra, len(ids))
-                skey = s if asc else -s
-                if len(ids) > ke:
-                    pre = np.argpartition(skey, ke - 1, axis=1)[:, :ke]
-                    vals = np.take_along_axis(skey, pre, axis=1)
-                    order = np.lexsort((pre, vals), axis=1)
-                    sel = np.take_along_axis(pre, order, axis=1)
-                    kth = vals.max(axis=1)
-                    straddle = np.flatnonzero(
-                        np.isfinite(kth)
-                        & ((skey <= kth[:, None]).sum(axis=1) > ke)
-                    )
-                    for r in straddle:
-                        cand = np.flatnonzero(skey[r] <= kth[r])
-                        sel[r] = cand[np.lexsort((cand, skey[r][cand]))[:ke]]
-                else:
-                    # stable argsort == per-row lexsort((pos, skey)):
-                    # ties break to the smaller column index (= docid)
-                    sel = np.argsort(skey, axis=1, kind="stable")[:, :ke]
-                sc = np.take_along_axis(s, sel, axis=1)
-                qrep = np.repeat(qids_all[lo : lo + chunk], ke)
-                did = ids[sel.ravel()]
-                scores = sc.ravel()
-                if banded:
-                    # banded-out slots carry the sentinel; drop them so
-                    # they never reach the global top-k
-                    ok = np.isfinite(scores)
-                    qrep, did, scores = qrep[ok], did[ok], scores[ok]
-                outs.append(
-                    pd.DataFrame({"qid": qrep, "_docid": did, "score": scores})
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        # pin the kernel fan-out: AQE's byte-based partition coalescing
-        # serializes the CPU-heavy BLAS kernel onto 1-2 cores when the
-        # shuffle is only a few MB (session.partition_for_kernel)
-        from gamma_spark.session import partition_for_kernel
-
-        ng = len(self.centroids) * max(1, salts)
-        partials = (
-            partition_for_kernel(qprobed, cogroup_keys, ng)
-            .groupby(*cogroup_keys)
-            .cogroup(
-                partition_for_kernel(dsel, cogroup_keys, ng)
-                .groupby(*cogroup_keys)
-            )
-            .applyInPandas(per_cluster, schema="qid long, _docid long, score double")
-        )
-
-        if not rescore:
-            return topk(
-                partials, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"]
-            )
-        # two-phase exact rescore (bit-identical to the SQL oracle): the
-        # candidate set is k-per-(query,cluster) — candidate-bounded
-        # joins. (qid, _docid) pairs are already unique: each doc lives
-        # in exactly ONE (cluster_id, _salt) bucket, so no (query, doc)
-        # pair can be emitted by two cogroup blocks — the former
-        # dropDuplicates spent a full exchange + two hash aggregates
-        # proving a property the disjoint partitioning guarantees.
-        cand = partials.select("qid", "_docid")
-        # candidate vectors come from the cheapest equivalent source:
-        # the build-time docs relation (bare scan) instead of index_df,
-        # whose in-memory form re-runs the cluster-assignment
-        # MapInPandas — a second full Python pass over the corpus just
-        # to read (_docid, vector). Values are identical: every
-        # candidate id has exactly one row on either side (candidates
-        # already passed the predicate/_deleted filters upstream).
-        fetch_src = self._src_docs
-        if fetch_src is not None:
-            fetch = fetch_src.select("_docid", F.col(doc_vec).alias("_dvec"))
-        else:
-            fetch = dsel.select("_docid", "_dvec")
-        rescore_col = V.score(metric_u, "_dvec", "_qvec", l2_sqrt=l2_sqrt)
-        if metric_u == "HAMMING":
-            rescore_col = rescore_col.cast("double")  # match kernel dtype
-        rescored = (
-            cand.join(fetch, on="_docid", how="inner")
-            .join(qsel, on="qid", how="inner")
-            .select("qid", "_docid", rescore_col.alias("score"))
-        )
-        # the band boundary is decided on the exact (oracle-grade)
-        # score; the kernel-side mask only kept slots from being wasted
-        if min_score is not None:
-            rescored = rescored.filter(F.col("score") >= min_score)
-        if max_score is not None:
-            rescored = rescored.filter(F.col("score") <= max_score)
-        return topk(
-            rescored, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"]
+        return self._join_distributed(
+            self.index_df, queries, scorer_for(metric_u, doc_vec, kernel_sqrt),
+            k, nprobe, predicate, query_id=query_id, query_vec=query_vec,
+            probe_vec=probe_vec, salts=salts, band=band, guard=rescore,
+            hierarchical=hierarchical, super_probe=super_probe, rerank=rerank,
         )

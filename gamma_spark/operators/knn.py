@@ -43,6 +43,14 @@ from gamma_spark.operators.topk import merge_running_topk, topk
 
 RESULT_COLS = ("qid", "_docid", "score", "rank")
 
+#: above this query count the scan kernel beats the expression join
+#: (measured: 2048 queries x 200k docs, join 131 s vs scan 4 s; even at
+#: 64 queries x 1M docs join loses 26 s vs ~6 s). The join path's value
+#: is bit-reproducibility vs the SQL oracle, needed only for small
+#: correctness batches. Shared by the planner's brute path and the IVF
+#: request path's 'auto' strategy.
+SCAN_STRATEGY_MIN_Q = 16
+
 
 def _apply_prefilter(docs: DataFrame, predicate: Column | None) -> DataFrame:
     if predicate is not None:
@@ -131,7 +139,8 @@ def knn_scan(
     metric_u = metric.upper()
     if metric_u == "COSINE":
         # loop-invariant: hoisted out of the per-Arrow-batch kernel
-        # (the _search_scan form, ivf.py) — same values, same arithmetic
+        # (as FlatScorer.queries does, ivfsearch.py) — same values, same
+        # arithmetic
         qmat_n = qmat / np.maximum(
             np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30
         )

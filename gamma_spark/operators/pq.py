@@ -20,14 +20,15 @@ Spark design:
   (m entries in [0, ksub)) + ``cluster_id``, persisted partitioned by
   ``cluster_id``. At 100 TB the codes table is ~m bytes/row — the whole
   point of PQ is that this scan is tiny next to raw vectors.
-- **ADC search**: the kernel receives only the (small) centroid matrix,
-  codebooks, rotation, and query matrix; it builds the per-(query,
-  probed-list) residual LUTs on the executor per Arrow batch — LUT
-  memory never scales with |queries| x nprobe on the driver — and keeps
-  partition-local top-``recall_num`` heaps (same shuffle profile as the
-  FLAT scan kernel).
-- **Rerank**: candidates join back to raw vectors, exact distance,
-  final top-k (AQE broadcasts the k-scale candidate side).
+- **ADC search**: the shared IVF skeleton (:mod:`.ivfsearch`) with
+  :class:`PqScorer`, which receives only the (small) centroid matrix,
+  codebooks and rotation; it builds the per-(query, probed-list)
+  residual LUTs on the executor — LUT memory never scales with
+  |queries| x nprobe on the driver — and the skeleton keeps
+  top-``recall_num`` candidates per query.
+- **Rerank**: the skeleton's :func:`~.ivfsearch.exact_rerank` joins the
+  candidates back to raw vectors for exact distances, then the final
+  top-k (AQE broadcasts the k-scale candidate side).
 """
 
 from __future__ import annotations
@@ -42,14 +43,21 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from gamma_spark.functions.vector import stack_vectors
 
-from gamma_spark.functions import vector as V
 from gamma_spark.operators.ivf import (
     IvfFlatIndex,
-    _presented_to_kernel_band,
+    _collect_sample,
+    _estimate_rows,
+    _train_centroids,
+    _write_index,
     assign_clusters,
     kmeans_lloyd_np,
 )
-from gamma_spark.operators.topk import merge_running_topk, topk
+from gamma_spark.operators.ivfsearch import (
+    IvfBase,
+    Scorer,
+    _presented_to_kernel_band,
+)
+from gamma_spark.operators.knn import _apply_prefilter
 
 
 def anisotropic_kmeans_np(
@@ -216,19 +224,111 @@ def _encode_codes(
     )
 
 
-#: request-path ADC memory bounds (r9, found by the SIFT1M anchor
-#: rehearsal — see IvfPqIndex.search): above LUT_PARTITION_BYTES of
-#: total residual-LUT working set the pruned codes are repartitioned
-#: by cluster so tasks build disjoint table subsets; LUT_CACHE_BYTES
-#: hard-bounds the per-task cache for any input layout. Small
-#: request-path shapes (the reference's topn 10 / req_num 1 defaults,
-#: `tests/test.h:594-597`) stay far below both and keep their
-#: shuffle-free plan.
-LUT_PARTITION_BYTES = 256 << 20
-LUT_CACHE_BYTES = 512 << 20
+class PqScorer(Scorer):
+    """IVFPQ / VEARCH scanner: asymmetric distance computation over
+    residual PQ codes. Per (query, cluster) the residual LUT holds, per
+    subspace, the query's score against every codeword; a doc's score
+    is the base term plus one lookup per subspace (summed in subspace
+    order)."""
+
+    #: request-path ADC memory bounds (found by the SIFT1M anchor
+    #: rehearsal): the kernel's real memory load is the residual LUTs —
+    #: one (m, ksub) float64 table per (query, probed cluster) pair,
+    #: ~5.4 GB at 1024 q x nprobe 40, 64x256. Over unpartitioned codes
+    #: every task sees nearly every cluster and pages in the full set
+    #: (32 workers x 5.4 GB OOM'd the host). Above LUT_PARTITION_BYTES
+    #: of total LUT working set the pruned codes are cluster-partitioned
+    #: and sorted so each task builds only its own clusters' tables;
+    #: LUT_CACHE_BYTES hard-bounds the per-task cache for any layout.
+    #: Small request shapes (the reference's topn 10 / req_num 1
+    #: defaults, `tests/test.h:594-597`) stay far below both and keep
+    #: their shuffle-free plan.
+    LUT_PARTITION_BYTES = 256 << 20
+    LUT_CACHE_BYTES = 512 << 20
+
+    col = "codes"
+
+    def __init__(self, index: "IvfPqIndex", metric: str):
+        self.metric = metric
+        self.cents, self.cb, self.rot = index.centroids, index.codebooks, index.rotation
+        self.m, self.ksub, self.dsub = index.m, index.ksub, index.dsub
+        # resolved on the driver: executor workers import their own
+        # module copy, so the class attribute would not carry a
+        # per-session override into the kernel
+        self.cache_bytes = self.LUT_CACHE_BYTES
+
+    def queries(self, values) -> np.ndarray:
+        return stack_vectors(values, "PQ scan (queries)").astype(np.float64)
+
+    def docs(self, values, c: int) -> np.ndarray:
+        return np.stack(values).astype(np.int64)  # (B, m) codes
+
+    def _residual(self, q: np.ndarray, c: int):
+        if self.metric == "IP":
+            # x = c + code@R^T  =>  <q,x> = <q,c> + <q@R, code>
+            return q @ self.rot, q @ self.cents[c]
+        # ||q-x||^2 = ||(q-c)@R - code||^2 (rotation-invariant)
+        return (q - self.cents[c][None, :]) @ self.rot, np.zeros(len(q))
+
+    def _lut(self, qres: np.ndarray, i: int) -> np.ndarray:
+        qsub = qres[:, i * self.dsub : (i + 1) * self.dsub]
+        cbi = self.cb[i]
+        if self.metric == "IP":
+            return qsub @ cbi.T
+        return (
+            (qsub * qsub).sum(axis=1)[:, None]
+            - 2.0 * (qsub @ cbi.T)
+            + (cbi * cbi).sum(axis=1)[None, :]
+        )
+
+    @staticmethod
+    def _adc(base: np.ndarray, luts, codes: np.ndarray) -> np.ndarray:
+        s = np.broadcast_to(base[:, None], (len(base), len(codes))).copy()
+        for i, lut in enumerate(luts):
+            s += lut[:, codes[:, i]]
+        return s
+
+    def score(self, q, codes, c):
+        # LUTs built one subspace at a time: the distributed path's
+        # query chunks can be large, so never hold all m tables at once
+        qres, base = self._residual(q, c)
+        return self._adc(base, (self._lut(qres, i) for i in range(self.m)), codes)
+
+    def request_kernel(self, q):
+        """Request-path kernel with a per-task LUT cache keyed by
+        cluster (a cluster's probing queries are fixed per request). The
+        cache is BOUNDED: when it would exceed ``cache_bytes`` it is
+        dropped wholesale (cluster-sorted input makes re-entry of an
+        evicted cluster rare; tables are pure functions of (query,
+        cluster), so results are unaffected)."""
+        cache: dict = {}
+        held = 0
+
+        def run(c, qsel, codes):
+            nonlocal held
+            hit = cache.get(c)
+            if hit is None:
+                qres, base = self._residual(q[qsel], c)
+                luts = [self._lut(qres, i) for i in range(self.m)]
+                size = sum(t.nbytes for t in luts)
+                if held + size > self.cache_bytes and cache:
+                    cache.clear()
+                    held = 0
+                hit = cache[c] = (base, luts)
+                held += size
+            return self._adc(hit[0], hit[1], codes)
+
+        return run
+
+    def layout(self, rel, pmask):
+        if int(pmask.sum()) * self.m * self.ksub * 8 > self.LUT_PARTITION_BYTES:
+            return rel.repartition(F.col("cluster_id")).sortWithinPartitions(
+                "cluster_id"
+            )
+        return rel
 
 
-class IvfPqIndex:
+class IvfPqIndex(IvfBase):
     """IVF + residual PQ codes (+ optional OPQ) + exact rerank."""
 
     name = "IVFPQ"
@@ -275,8 +375,6 @@ class IvfPqIndex:
         eta = (d-1)·T²/(1-T²) with T = ``aniso_t``. Everything
         downstream (codes, ADC, rerank) is unchanged: anisotropy only
         moves WHERE the codebook centroids sit."""
-        from gamma_spark.operators.ivf import _train_centroids
-
         sout: dict = {}
         centroids = _train_centroids(
             docs, doc_vec, ncentroids, sample_size, seed, sample_out=sout
@@ -295,29 +393,12 @@ class IvfPqIndex:
         # identical full table, so training is bit-unchanged). Only
         # the distributed-MLlib training branch (no collected sample)
         # still pays its own collection.
-        from gamma_spark.operators.ivf import _estimate_rows
-
         cap = min(sample_size, 100_000, 128 * ksub)
         if "data" in sout:
             sample = sout["data"][:cap]
         else:
-            svec = docs.select(F.col(doc_vec).cast("array<double>").alias("_v"))
             est = _estimate_rows(docs, doc_vec)
-            if est is not None and est > cap:
-                svec = svec.sample(fraction=min(1.0, 1.5 * cap / est), seed=seed)
-            spdf = svec.limit(cap).toPandas()
-            if spdf.empty:
-                # fraction sampling under an overestimated row count can
-                # return nothing; fall back to a plain bounded take (same
-                # guard as ivf._train_centroids)
-                spdf = docs.select(
-                    F.col(doc_vec).cast("array<double>").alias("_v")
-                ).limit(cap).toPandas()
-            if spdf.empty:
-                raise ValueError("cannot train codebooks on an empty relation")
-            sample = stack_vectors(
-                spdf["_v"].to_numpy(), "PQ codebook training sample"
-            ).astype(np.float64)
+            sample = _collect_sample(docs, doc_vec, cap, est, seed, "codebooks")
         # residuals to the assigned coarse centroid (faiss IVFPQ)
         a = (
             -2.0 * (sample @ centroids.T)
@@ -348,20 +429,11 @@ class IvfPqIndex:
 
         codes_df = _encode_codes(docs, centroids, codebooks, rotation, doc_vec)
         if path:
-            # co-locate inverted lists before the partitioned write
-            codes_df.repartition("cluster_id").write.mode("overwrite").partitionBy(
-                "cluster_id"
-            ).parquet(os.path.join(path, "codes"))
-            np.save(os.path.join(path, "centroids.npy"), centroids)
-            np.save(os.path.join(path, "codebooks.npy"), codebooks)
-            np.save(os.path.join(path, "rotation.npy"), rotation)
-            from gamma_spark.io_util import atomic_write_json
-
-            atomic_write_json(
-                os.path.join(path, "meta.json"),
+            codes_df = _write_index(
+                codes_df, path, "codes",
+                {"centroids": centroids, "codebooks": codebooks, "rotation": rotation},
                 {"model": cls.name, "nsubvector": nsubvector, "doc_vec": doc_vec},
             )
-            codes_df = docs.sparkSession.read.parquet(os.path.join(path, "codes"))
         return cls(centroids, codebooks, rotation, codes_df, docs, doc_vec, path)
 
     @classmethod
@@ -388,23 +460,43 @@ class IvfPqIndex:
             doc_vec or self.doc_vec,
         )
 
-    def _coarse(self) -> IvfFlatIndex:
-        """Cached coarse-quantizer view over the centroids (so an
-        HNSW-accelerated probe survives across search() calls)."""
-        c = getattr(self, "_coarse_idx", None)
-        if c is None:
-            c = IvfFlatIndex(self.centroids, self.codes_df)
-            self._coarse_idx = c
-        return c
-
     def enable_hnsw_probe(self, **kw) -> "IvfPqIndex":
         """The reference's optional HNSW coarse quantizer for IVFPQ
         (SURVEY K3): accelerate the nprobe assignment with a graph over
-        the centroid set. Delegates to
-        :meth:`IvfFlatIndex.enable_hnsw_probe`; the degenerate
-        nprobe == ncentroids oracle path stays brute-force exact."""
-        self._coarse().enable_hnsw_probe(**kw)
-        return self
+        the centroid set (:meth:`IvfFlatIndex.enable_hnsw_probe`); the
+        degenerate nprobe == ncentroids oracle path stays brute-force
+        exact."""
+        return IvfFlatIndex.enable_hnsw_probe(self, **kw)
+
+    def _allowed(self, rel, predicate, docs):
+        """The codes table carries no doc columns: filter by a left-semi
+        join against the raw docs that pass the predicate and the
+        ``_deleted`` mask."""
+        raw = docs if docs is not None else self.raw_docs
+        if predicate is None and "_deleted" not in raw.columns:
+            return rel
+        allowed = _apply_prefilter(raw, predicate).select("_docid")
+        return rel.join(allowed, on="_docid", how="leftsemi")
+
+    def _tail(self, metric_u, has_rank, docs, doc_vec, l2_sqrt, min_score, max_score) -> dict:
+        """Shared skeleton arguments of both paths. F8 band (gamma
+        parity: IVFPQ bands only in the exact rerank,
+        `gamma_index_ivfpq.cc:668,689`): with ``has_rank`` the ADC
+        estimates must NOT be banded — a candidate whose quantized
+        estimate sits outside the band but whose exact score is inside
+        it would be unrecoverable. Without rerank the ADC score IS the
+        presented score: the band masks inside the kernel, mapped to
+        its squared-L2 scale, and sqrt applies at presentation."""
+        if has_rank:
+            rerank = dict(
+                docs=docs, doc_vec=doc_vec, l2_sqrt=l2_sqrt,
+                min_score=min_score, max_score=max_score,
+            )
+            return dict(rerank=rerank)
+        band = _presented_to_kernel_band(
+            min_score, max_score, squared=(metric_u == "L2" and l2_sqrt)
+        )
+        return dict(band=band, sqrt_out=l2_sqrt and metric_u == "L2")
 
     # -- search -----------------------------------------------------------
     def search(
@@ -424,7 +516,8 @@ class IvfPqIndex:
         query_id: str = "qid",
         query_vec: str = "qvec",
     ) -> DataFrame:
-        """Residual-ADC candidate generation + optional exact rerank.
+        """Residual-ADC candidate generation + optional exact rerank on
+        the request path.
 
         ``recall_num`` defaults to max(4k, 64) candidates per query
         (reference keeps recall_num >= k, `gamma_index_ivfpq.cc:762-764`)
@@ -432,217 +525,19 @@ class IvfPqIndex:
         clustered corpora. Without ``has_rank`` the ADC ordering is
         truncated at k directly.
         """
-        doc_vec = doc_vec or self.doc_vec
-        raw = docs if docs is not None else self.raw_docs
-        recall_num = recall_num or max(4 * k, 64)
-        asc = V.metric_ascending(metric)
         metric_u = metric.upper()
         if metric_u not in ("IP", "L2"):
             raise ValueError("IVFPQ supports IP and L2")
-
-        qrows = queries.select(query_id, query_vec).collect()
-        qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-
-        probes = self._coarse().probe_clusters(qmat, nprobe)
-        wanted = sorted({int(c) for row in probes for c in row})
-        probe_mask = np.zeros((len(qids), len(self.centroids)), dtype=bool)
-        for qi, row in enumerate(probes):
-            probe_mask[qi, row] = True
-
-        pruned = self.codes_df
-        if len(wanted) < len(self.centroids):
-            pruned = pruned.filter(F.col("cluster_id").isin(wanted))
-        if predicate is not None or "_deleted" in raw.columns:
-            allowed = raw
-            if predicate is not None:
-                allowed = allowed.filter(predicate)
-            if "_deleted" in allowed.columns:
-                allowed = allowed.filter(~F.col("_deleted"))
-            pruned = pruned.join(allowed.select("_docid"), on="_docid", how="leftsemi")
-
-        qids_l, asc_l, rn = qids, asc, recall_num
-        pmask = probe_mask
-        cb, cents, rot = self.codebooks, self.centroids, self.rotation
-        m_, ksub_, dsub_ = self.m, self.ksub, self.dsub
-        worst = np.inf if asc else -np.inf
-
-        # F8 band handling (gamma parity: IVFPQ bands only in the exact
-        # rerank, `gamma_index_ivfpq.cc:668,689` — same rule as
-        # knn_join_distributed below). With has_rank the ADC estimates
-        # must NOT be banded: a candidate whose quantized estimate sits
-        # outside the band but whose exact score is inside it would be
-        # unrecoverable. Without rerank the band applies to the ADC
-        # scores, mapped to the kernel's scale (squared L2 when the
-        # presented scale is sqrt).
-        if has_rank:
-            kmin = kmax = None
-        else:
-            kmin, kmax = _presented_to_kernel_band(
+        raw = docs if docs is not None else self.raw_docs
+        return self._search_request(
+            self.codes_df, queries, PqScorer(self, metric_u), k, nprobe,
+            predicate, raw, query_id=query_id, query_vec=query_vec,
+            strategy="scan", pool=recall_num or max(4 * k, 64),
+            **self._tail(
+                metric_u, has_rank, raw, doc_vec or self.doc_vec, l2_sqrt,
                 min_score, max_score,
-                squared=(metric_u == "L2" and l2_sqrt),
-            )
-
-        # r9 OOM fix (found by the SIFT1M anchor rehearsal): the
-        # kernel's real memory load is the residual LUTs — one
-        # (m, ksub) float64 table per (query, probed cluster) pair,
-        # probe_mask.sum() of them = ~5.4 GB at the anchor shape
-        # (1024 q x nprobe 40, 64x256). Over UNPARTITIONED codes every
-        # task sees nearly every cluster and pages in the full set
-        # (32 workers x 5.4 GB OOM'd the host). Above a budget,
-        # cluster-partition + sort the codes so each task builds only
-        # its own clusters' tables exactly once; the in-kernel cache
-        # eviction below is the belt-and-braces bound for any layout.
-        lut_total = int(probe_mask.sum()) * self.m * self.ksub * 8
-        if lut_total > LUT_PARTITION_BYTES:
-            pruned = pruned.repartition(F.col("cluster_id")).sortWithinPartitions(
-                "cluster_id"
-            )
-        # resolved DRIVER-side into the closure (executor workers
-        # import their own module copy, so a module global would not
-        # be overridable per-session/test)
-        lut_cache_cap = LUT_CACHE_BYTES
-
-        def adc_scan(batches):
-            best_s = np.full((len(qids_l), rn), worst)
-            best_i = np.full((len(qids_l), rn), -1, dtype=np.int64)
-            # per-(query, cluster) residual LUTs built lazily in the
-            # kernel: memory scales with clusters seen per partition,
-            # not with |queries| x nprobe on the driver. The cache is
-            # BOUNDED: when it would exceed LUT_CACHE_BYTES it is
-            # dropped wholesale (cluster-sorted input makes re-entry
-            # of an evicted cluster rare; correctness is unaffected,
-            # tables are pure functions of (query, cluster)).
-            lut_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-            lut_bytes = 0
-            seen = 0
-
-            def luts_for(c: int):
-                nonlocal lut_bytes
-                hit = lut_cache.get(c)
-                if hit is not None:
-                    return hit
-                qsel = np.flatnonzero(pmask[:, c])
-                if metric_u == "IP":
-                    # x = c + code@R^T  =>  <q,x> = <q,c> + <q@R, code>
-                    qres = qmat[qsel] @ rot
-                    base = qmat[qsel] @ cents[c]
-                else:
-                    # ||q-x||^2 = ||(q-c)@R - code||^2 (rotation-invariant)
-                    qres = (qmat[qsel] - cents[c][None, :]) @ rot
-                    base = np.zeros(len(qsel))
-                luts = np.empty((len(qsel), m_, ksub_))
-                for i in range(m_):
-                    qsub = qres[:, i * dsub_ : (i + 1) * dsub_]
-                    cbi = cb[i]
-                    if metric_u == "IP":
-                        luts[:, i, :] = qsub @ cbi.T
-                    else:
-                        luts[:, i, :] = (
-                            (qsub * qsub).sum(axis=1)[:, None]
-                            - 2.0 * (qsub @ cbi.T)
-                            + (cbi * cbi).sum(axis=1)[None, :]
-                        )
-                if lut_bytes + luts.nbytes > lut_cache_cap and lut_cache:
-                    lut_cache.clear()
-                    lut_bytes = 0
-                lut_cache[c] = (qsel, luts, base)
-                lut_bytes += luts.nbytes
-                return lut_cache[c]
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                seen += len(pdf)
-                codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (B, m)
-                ids = pdf["_docid"].to_numpy(dtype=np.int64)
-                clus = pdf["cluster_id"].to_numpy(dtype=np.int64)
-                for c in np.unique(clus):
-                    qsel, luts, base = luts_for(int(c))
-                    if not len(qsel):
-                        continue
-                    dmask = clus == c
-                    bcodes = codes[dmask]
-                    bids = ids[dmask]
-                    s = np.broadcast_to(
-                        base[:, None], (len(qsel), len(bids))
-                    ).copy()
-                    for i in range(m_):
-                        s += luts[:, i, bcodes[:, i]]
-                    if kmin is not None:
-                        s = np.where(s >= kmin, s, worst)
-                    if kmax is not None:
-                        s = np.where(s <= kmax, s, worst)
-                    # merge into the running top-rn — shared kernel
-                    # (operators/topk.merge_running_topk, r9): dual-pivot
-                    # tie detection + smallest-docid lexsort repair
-                    new_s, new_i = merge_running_topk(
-                        best_s[qsel],
-                        best_i[qsel],
-                        s,
-                        np.broadcast_to(bids, (len(qsel), len(bids))),
-                        rn,
-                        asc_l,
-                    )
-                    best_s[qsel] = new_s
-                    best_i[qsel] = new_i
-            if not seen:
-                return
-            valid = (best_i.ravel() >= 0) & np.isfinite(best_s.ravel())
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids_l, best_s.shape[1])[valid],
-                    "_docid": best_i.ravel()[valid],
-                    "adc_score": best_s.ravel()[valid],
-                }
-            )
-
-        partials = pruned.mapInPandas(
-            adc_scan, schema="qid long, _docid long, adc_score double"
+            ),
         )
-        candidates = topk(
-            partials, ["qid"], "adc_score", recall_num, ascending=asc, rank_col=None,
-            tiebreak_cols=["_docid"],
-        )
-
-        if not has_rank:
-            out = candidates.withColumnRenamed("adc_score", "score")
-            if l2_sqrt and metric_u == "L2":
-                # gamma applies sqrt at response packing regardless of
-                # rank mode (`idl/fbs/request.fbs:39`); monotone, so
-                # ranks are unchanged
-                out = out.withColumn("score", F.sqrt(F.col("score")))
-            return topk(out, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"])
-
-        # two-phase rerank (R6): exact distances for the candidate set
-        spark = self.codes_df.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        qschema = StructType(
-            [
-                StructField("_qid2", queries.schema[query_id].dataType),
-                StructField("_qvec", queries.schema[query_vec].dataType),
-            ]
-        )
-        qdf = spark.createDataFrame([(r[0], r[1]) for r in qrows], schema=qschema)
-        rer = (
-            candidates.join(raw.select("_docid", doc_vec), on="_docid", how="inner")
-            .join(F.broadcast(qdf), on=F.col("qid") == F.col("_qid2"), how="inner")
-            .select(
-                "qid",
-                "_docid",
-                V.score(metric, doc_vec, "_qvec", l2_sqrt=l2_sqrt).alias("score"),
-            )
-        )
-        if min_score is not None:
-            rer = rer.filter(F.col("score") >= min_score)
-        if max_score is not None:
-            rer = rer.filter(F.col("score") <= max_score)
-        return topk(rer, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"])
-
-    # -- corpus-scale ADC join (no driver-side query collect) ------------
-    #: bound on the (query-chunk x inverted-list) ADC matrix per task
-    COGROUP_CHUNK_CELLS = 8_000_000
 
     def knn_join_distributed(
         self,
@@ -661,224 +556,26 @@ class IvfPqIndex:
         max_score: float | None = None,
     ) -> DataFrame:
         """IVFPQ kNN join where the queries side is a DataFrame of any
-        size — the PQ twin of ``IvfFlatIndex.knn_join_distributed``
-        (corpus x corpus: kNN graph / semantic-dedup mining over codes).
-
-        Plan: executor-side multi-probe explodes queries x nprobe; ONE
-        shuffle of each side on ``cluster_id`` into a cogrouped
-        ``applyInPandas`` that builds the residual LUTs for *that
-        cluster's* queries and ADC-scans its inverted list (chunked, k
-        per (query, cluster)); global top-``recall_num``; then the
-        two-phase exact rerank joins candidates to raw vectors AND to
-        the queries *relation* (plain joins — nothing collected). With
-        nprobe == ncentroids and recall_num == N the result equals
-        exact brute force bit-for-bit (rerank scores are the in-order
-        Catalyst expression).
-
-        ``salts > 1`` splits each inverted list into deterministic
-        doc shards (``pmod(xxhash64(_docid), salts)``) with the queries
-        replicated per shard — a pathologically hot cluster in the
-        codes table becomes ``salts`` tasks instead of one giant
-        cogroup task (same scheme as the IVF twin, VERDICT r3 #3);
-        per-shard top-rn always contains the shard's members of the
-        global top-rn, so results are identical for any ``salts``.
-
-        F8 band: the reference applies min/max_score to IVFPQ at the
-        exact rerank (`gamma_index_ivfpq.cc:668,689`), not on ADC
-        approximations — so with ``has_rank`` the band filters the
-        reranked exact scores before final top-k; without rerank the
-        ADC score IS the presented score and the band masks inside the
-        scan kernel (pre-top-k, like the FLAT scan band).
-        """
-        recall_num = recall_num or max(4 * k, 64)
+        size (corpus x corpus: kNN graph / semantic-dedup mining over
+        codes) — the skeleton's distributed path with the ADC scorer,
+        per-(query, cluster) top-``recall_num``, global
+        top-``recall_num``, then the exact rerank against the raw
+        vectors and the queries *relation* (plain joins — nothing
+        collected). With nprobe == ncentroids and recall_num == N the
+        result equals exact brute force bit-for-bit. ``salts`` and the
+        band behave as in :meth:`search` and the IVF join."""
         metric_u = metric.upper()
         if metric_u not in ("IP", "L2"):
             raise ValueError("IVFPQ supports IP and L2")
-        asc = V.metric_ascending(metric_u)
-        worst = np.inf if asc else -np.inf
-        cents = self.centroids
-        nprobe = min(nprobe, len(cents))
-        cb, rot = self.codebooks, self.rotation
-        m_, ksub_, dsub_ = self.m, self.ksub, self.dsub
-        rn = recall_num
-        chunk_cells = self.COGROUP_CHUNK_CELLS
-        salts = max(1, int(salts))
-        # kernel-side band only when the ADC score is the presented
-        # score (no rerank) — see docstring. The kernel holds squared
-        # L2; with l2_sqrt the presented band maps to its squares
-        # (monotone), same rule as the IVF scan kernel.
-        if has_rank:
-            kmin = kmax = None
-        else:
-            kmin, kmax = _presented_to_kernel_band(
+        return self._join_distributed(
+            self.codes_df, queries, PqScorer(self, metric_u), k, nprobe,
+            predicate, query_id=query_id, query_vec=query_vec, salts=salts,
+            pool=recall_num or max(4 * k, 64),
+            **self._tail(
+                metric_u, has_rank, self.raw_docs, self.doc_vec, l2_sqrt,
                 min_score, max_score,
-                squared=(metric_u == "L2" and l2_sqrt),
-            )
-        banded = kmin is not None or kmax is not None
-
-        qsel = queries.select(
-            F.col(query_id).alias("qid"), F.col(query_vec).alias("_qvec")
-        )
-        vec_type = qsel.schema["_qvec"].dataType.simpleString()
-
-        # shared chunked executor probe (ivf.make_exec_probe): the PQ
-        # twin had re-grown an UNCHUNKED copy — at 131k centroids a
-        # 10k-row Arrow batch would transiently hold ~10 GB per worker,
-        # the exact OOM the IVF twin's chunking fixed (SCALING.md r7)
-        from gamma_spark.operators.ivf import make_exec_probe
-
-        probe = make_exec_probe(cents, nprobe, salts)
-
-        # parallelize the nprobe*salts fan-out when the query relation
-        # arrives under-partitioned (same single-task-probe fix as the
-        # IVF twin; metadata-only, no-op at scale)
-        from gamma_spark.session import ensure_parallelism
-
-        qsel = ensure_parallelism(qsel, fanout=float(nprobe * salts))
-
-        qprobed = qsel.mapInPandas(
-            probe, schema=f"qid long, _qvec {vec_type}, cluster_id int, _salt int"
-        )
-
-        pruned = self.codes_df
-        raw = self.raw_docs
-        if predicate is not None or "_deleted" in raw.columns:
-            allowed = raw
-            if predicate is not None:
-                allowed = allowed.filter(predicate)
-            if "_deleted" in allowed.columns:
-                allowed = allowed.filter(~F.col("_deleted"))
-            pruned = pruned.join(allowed.select("_docid"), on="_docid", how="leftsemi")
-        dsel = pruned.select(
-            "cluster_id",
-            "_docid",
-            "codes",
-            (F.pmod(F.xxhash64(F.col("_docid")), F.lit(salts)).cast("int")).alias(
-                "_salt"
             ),
         )
-
-        def per_cluster(key, qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            if qpdf.empty or dpdf.empty:
-                return pd.DataFrame({"qid": [], "_docid": [], "adc_score": []}).astype(
-                    {"qid": "int64", "_docid": "int64", "adc_score": "float64"}
-                )
-            c = int(key[0])
-            order = np.argsort(dpdf["_docid"].to_numpy(), kind="stable")
-            codes = np.stack(dpdf["codes"].to_numpy())[order].astype(np.int64)
-            ids = dpdf["_docid"].to_numpy(dtype=np.int64)[order]
-            qall = stack_vectors(
-                qpdf["_qvec"].to_numpy(), "PQ distributed join (queries)"
-            ).astype(np.float64)
-            qids_all = qpdf["qid"].to_numpy(dtype=np.int64)
-            kk = min(rn, len(ids))
-            chunk = max(1, chunk_cells // max(1, len(ids)))
-            outs = []
-            for lo in range(0, len(qall), chunk):
-                qc = qall[lo : lo + chunk]
-                if metric_u == "IP":
-                    qres = qc @ rot
-                    base = qc @ cents[c]
-                else:
-                    qres = (qc - cents[c][None, :]) @ rot
-                    base = np.zeros(len(qc))
-                s = np.broadcast_to(base[:, None], (len(qc), len(ids))).copy()
-                for i in range(m_):
-                    qsub = qres[:, i * dsub_ : (i + 1) * dsub_]
-                    cbi = cb[i]
-                    if metric_u == "IP":
-                        lut = qsub @ cbi.T
-                    else:
-                        lut = (
-                            (qsub * qsub).sum(axis=1)[:, None]
-                            - 2.0 * (qsub @ cbi.T)
-                            + (cbi * cbi).sum(axis=1)[None, :]
-                        )
-                    s += lut[:, codes[:, i]]
-                if kmin is not None:
-                    s = np.where(s >= kmin, s, worst)
-                if kmax is not None:
-                    s = np.where(s <= kmax, s, worst)
-                # tie-aware preselection, fully vectorized (same kernel
-                # shape as the IVF twin — the former per-query Python
-                # lexsort loop was the hottest line at corpus-query
-                # counts, guide §4.2): one axis=1 lexsort orders every
-                # row by (score, col) — positions are docid-ordered, so
-                # that IS the oracle tie order; only rows where a tie
-                # actually straddles the kk boundary pay the per-row
-                # repair (ADC scores tie on low-entropy codes)
-                skey = s if asc else -s
-                if len(ids) > kk:
-                    pre = np.argpartition(skey, kk - 1, axis=1)[:, :kk]
-                    vals = np.take_along_axis(skey, pre, axis=1)
-                    order = np.lexsort((pre, vals), axis=1)
-                    sel = np.take_along_axis(pre, order, axis=1)
-                    kth = vals.max(axis=1)
-                    straddle = np.flatnonzero(
-                        np.isfinite(kth)
-                        & ((skey <= kth[:, None]).sum(axis=1) > kk)
-                    )
-                    for r in straddle:
-                        cand = np.flatnonzero(skey[r] <= kth[r])
-                        sel[r] = cand[np.lexsort((cand, skey[r][cand]))[:kk]]
-                else:
-                    # stable argsort == per-row lexsort((pos, skey))
-                    sel = np.argsort(skey, axis=1, kind="stable")[:, :kk]
-                sc = np.take_along_axis(s, sel, axis=1)
-                qrep = np.repeat(qids_all[lo : lo + chunk], kk)
-                did = ids[sel.ravel()]
-                scores = sc.ravel()
-                if banded:
-                    ok = np.isfinite(scores)
-                    qrep, did, scores = qrep[ok], did[ok], scores[ok]
-                outs.append(
-                    pd.DataFrame({"qid": qrep, "_docid": did, "adc_score": scores})
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        # pin the kernel fan-out: AQE's byte-based partition coalescing
-        # serializes the ADC kernel onto 1-2 cores when the shuffle is
-        # only a few MB (session.partition_for_kernel)
-        from gamma_spark.session import partition_for_kernel
-
-        ng = len(cents) * max(1, salts)
-        partials = (
-            partition_for_kernel(qprobed, ["cluster_id", "_salt"], ng)
-            .groupby("cluster_id", "_salt")
-            .cogroup(
-                partition_for_kernel(dsel, ["cluster_id", "_salt"], ng)
-                .groupby("cluster_id", "_salt")
-            )
-            .applyInPandas(per_cluster, schema="qid long, _docid long, adc_score double")
-        )
-        candidates = topk(
-            partials, ["qid"], "adc_score", rn, ascending=asc, rank_col=None,
-            tiebreak_cols=["_docid"],
-        )
-        if not has_rank:
-            out = candidates.withColumnRenamed("adc_score", "score")
-            if l2_sqrt and metric_u == "L2":
-                # gamma applies sqrt at response packing regardless of
-                # rank mode (`idl/fbs/request.fbs:39`); monotone, so
-                # ranks are unchanged
-                out = out.withColumn("score", F.sqrt(F.col("score")))
-            return topk(out, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"])
-        rer = (
-            candidates.join(raw.select("_docid", self.doc_vec), on="_docid", how="inner")
-            .join(qsel, on="qid", how="inner")
-            .select(
-                "qid",
-                "_docid",
-                V.score(metric_u, self.doc_vec, "_qvec", l2_sqrt=l2_sqrt).alias("score"),
-            )
-        )
-        # F8 band on the exact reranked score (gamma bands IVFPQ in
-        # compute_dis, not on ADC) — pre-top-k by construction
-        if min_score is not None:
-            rer = rer.filter(F.col("score") >= min_score)
-        if max_score is not None:
-            rer = rer.filter(F.col("score") <= max_score)
-        return topk(rer, ["qid"], "score", k, ascending=asc, tiebreak_cols=["_docid"])
 
 
 class VearchIndex(IvfPqIndex):

@@ -9,13 +9,12 @@ a shortlist (contrast IVFPQ, where the code is sub-vector-level and
 recall_num is the lever). The same tier faiss ships as
 IndexScalarQuantizer(QT_8bit) + IVF.
 
-Design: a thin composition over the IVF machinery — build trains the
-same coarse quantizer and writes a cluster-partitioned CODES table
-(uint8 bytes per row); search prunes code partitions with the standard
-probe, decodes ONLY the probed lists back to floats in an Arrow kernel,
-and delegates scoring/top-k to `IvfFlatIndex.search` on the decoded
-relation. Nothing else is new — pruning, kernels, bands, l2_sqrt and
-predicates are the already-audited paths.
+Design: build trains the shared coarse quantizer and writes a
+cluster-partitioned CODES table (the doc columns plus ``_sq8``, d uint8
+bytes per row); search is the shared IVF skeleton (:mod:`.ivfsearch`)
+with :class:`Sq8Scorer`, which dequantizes the probed codes inside the
+scan and cogroup kernels and then scores exactly like FLAT. Pruning,
+predicates, bands, l2_sqrt and the exact rerank are the skeleton's.
 """
 
 from __future__ import annotations
@@ -31,13 +30,56 @@ from gamma_spark.functions.vector import stack_vectors
 from gamma_spark.operators.ivf import (
     DEFAULT_NCENTROIDS,
     DEFAULT_NPROBE,
-    IvfFlatIndex,
     _train_centroids,
+    _write_index,
     assign_clusters,
 )
+from gamma_spark.operators.ivfsearch import FLOAT_METRICS, FlatScorer, IvfBase
 
 
-class IvfSq8Index:
+class Sq8Scorer(FlatScorer):
+    """IVFSQ8 scanner: dequantize the ``_sq8`` bytes to the
+    reconstruction value mn + c/255*(mx-mn), rounded through float32
+    (what a decoded float column holds), then score as FLAT — so the
+    code-native kernels are bit-identical to decode-then-score."""
+
+    def __init__(self, index: "IvfSq8Index", metric: str, sqrt: bool = False):
+        super().__init__(metric, "_sq8", sqrt)
+        self.join_col = index.doc_vec
+        self.mins = index.mins
+        self.span = np.maximum(index.maxs - index.mins, 1e-30)
+
+    def decode(self, values) -> np.ndarray:
+        C = np.stack(
+            [np.frombuffer(b, dtype=np.uint8, count=len(self.mins)) for b in values]
+        ).astype(np.float64)
+        return (self.mins + C / 255.0 * self.span).astype(np.float32).astype(
+            np.float64
+        )
+
+    def decode_rel(self, codes: DataFrame) -> DataFrame:
+        """Replace ``_sq8`` with the decoded float vector column
+        ``join_col`` (Arrow-batched, map-only) — for the Catalyst join
+        strategy, which scores a real column."""
+        from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
+
+        fields = [f for f in codes.schema.fields if f.name != "_sq8"]
+        keep = [f.name for f in fields]
+        out_col = self.join_col
+
+        def dec(batches):
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                out = pdf[keep].copy()
+                out[out_col] = list(self.decode(pdf["_sq8"]).astype(np.float32))
+                yield out
+
+        schema = StructType(fields + [StructField(out_col, ArrayType(FloatType()))])
+        return codes.mapInPandas(dec, schema=schema)
+
+
+class IvfSq8Index(IvfBase):
     """RetrievalModel analogue for the scalar-quantized tier."""
 
     name = "IVFSQ8"
@@ -103,18 +145,11 @@ class IvfSq8Index:
         assigned = assign_clusters(docs, centroids, doc_vec)
         codes = cls._encode(assigned, doc_vec, mins, maxs)
         if path:
-            codes.repartition("cluster_id").write.mode("overwrite").partitionBy(
-                "cluster_id"
-            ).parquet(os.path.join(path, "codes"))
-            np.save(os.path.join(path, "centroids.npy"), centroids)
-            np.save(os.path.join(path, "bounds.npy"), np.stack([mins, maxs]))
-            from gamma_spark.io_util import atomic_write_json
-
-            atomic_write_json(
-                os.path.join(path, "meta.json"),
+            codes = _write_index(
+                codes, path, "codes",
+                {"centroids": centroids, "bounds": np.stack([mins, maxs])},
                 {"model": cls.name, "ncentroids": len(centroids), "doc_vec": doc_vec},
             )
-            codes = docs.sparkSession.read.parquet(os.path.join(path, "codes"))
         return cls(centroids, codes, mins, maxs, doc_vec, path)
 
     @classmethod
@@ -159,58 +194,6 @@ class IvfSq8Index:
 
         return assigned.mapInPandas(enc, schema=out_schema)
 
-    def _decode(self, codes: DataFrame) -> DataFrame:
-        """Restore a float vector column from the uint8 codes —
-        reconstruction value mn + c/255*(mx-mn), the dequantization the
-        scoring kernel consumes. Arrow-batched, map-only."""
-        from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
-
-        mins64, maxs64 = self.mins, self.maxs
-        span = np.maximum(maxs64 - mins64, 1e-30)
-        doc_vec = self.doc_vec
-
-        fields = [f for f in codes.schema.fields if f.name != "_sq8"]
-        out_schema = StructType(
-            fields + [StructField(doc_vec, ArrayType(FloatType()))]
-        )
-        keep = [f.name for f in fields]
-        dim = len(mins64)
-
-        def dec(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                C = np.stack(
-                    [np.frombuffer(b, dtype=np.uint8, count=dim) for b in pdf["_sq8"]]
-                ).astype(np.float64)
-                V = (mins64 + C / 255.0 * span).astype(np.float32)
-                out = pdf[keep].copy()
-                out[doc_vec] = list(V)
-                yield out
-
-        return codes.mapInPandas(dec, schema=out_schema)
-
-    def _np_decoder(self):
-        """Kernel-side decoder for the code-native scan/cogroup paths:
-        maps a batch of ``_sq8`` byte strings straight to the float64
-        score matrix. Bit-identical to decode-then-score: the same
-        float64 dequantization expression rounded through float32 (what
-        :meth:`_decode` materializes) before the float64 promotion the
-        kernels apply."""
-        mins64 = self.mins
-        span = np.maximum(self.maxs - mins64, 1e-30)
-        dim = len(mins64)
-
-        def dec(raw) -> np.ndarray:
-            C = np.stack(
-                [np.frombuffer(b, dtype=np.uint8, count=dim) for b in raw]
-            ).astype(np.float64)
-            return (mins64 + C / 255.0 * span).astype(np.float32).astype(
-                np.float64
-            )
-
-        return dec
-
     # -- search ----------------------------------------------------------
 
     def search(
@@ -231,100 +214,37 @@ class IvfSq8Index:
         query_vec: str = "qvec",
         **kw,
     ) -> DataFrame:
-        """Probe → prune code partitions → the standard IVF scoring/
-        top-k. On the scan path (large batches) the probed CODES bytes
-        go straight into the BLAS kernel, which dequantizes at scoring
-        (one Python pass over 1-byte/dim rows — guide §4); the
-        small-batch Catalyst join path decodes the probed lists first
-        (it scores with an expression, bit-reproducible vs the oracle).
+        """The skeleton's request path with :class:`Sq8Scorer`: on the
+        scan strategy (large batches) the probed CODES bytes go straight
+        into the kernel, which dequantizes at scoring (one Python pass
+        over 1-byte/dim rows — guide §4); the small-batch Catalyst join
+        strategy decodes the probed lists first (it scores with an
+        expression, bit-reproducible vs the oracle). ``kw``: the
+        IVFFLAT ``strategy``/``probe_vec`` knobs.
 
         ``has_rank`` (R6, needs ``docs``): keep ``recall_num``
-        dequantized-score candidates, join them back to the raw
-        vectors, rescore exactly and re-select top-k — with full probes
-        and recall_num = N this degenerates to exact brute force
-        bit-for-bit (rerank scores are the in-order exact kernel), the
-        oracle configuration; at practical settings it erases the
-        quantization recall loss for the price of a k-scale join. Score
-        bands apply to the exact reranked scores, matching gamma
-        (`index/impl/gamma_index_ivfpq.cc:668,689`)."""
-        dv = doc_vec or self.doc_vec
-        qrows = queries.select(query_id, query_vec).collect()
-        qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-        prober = IvfFlatIndex(self.centroids, self.codes_df)
-        probes = prober.probe_clusters(qmat, nprobe)
-        wanted = sorted({int(c) for row in probes for c in row})
-        pruned = self.codes_df
-        if len(wanted) < len(self.centroids):
-            pruned = pruned.filter(F.col("cluster_id").isin(wanted))
-        # strategy resolution mirrors IvfFlatIndex.search's 'auto' rule
-        # (same constant, same float-metric set) so the relation handed
-        # down matches the path the delegate will take: the scan kernel
-        # consumes raw codes + the numpy decoder, the Catalyst join
-        # path needs the decoded float column
-        strategy = kw.pop("strategy", "auto")
-        use_scan = metric.upper() in ("IP", "L2", "COSINE") and (
-            strategy == "scan"
-            or (
-                strategy == "auto"
-                and len(qrows) > IvfFlatIndex.SCAN_STRATEGY_MIN_Q
+        dequantized-score candidates, rescore them exactly against the
+        raw vectors and re-select top-k — with full probes and
+        recall_num = N this degenerates to exact brute force
+        bit-for-bit, the oracle configuration; at practical settings it
+        erases the quantization recall loss for the price of a k-scale
+        join. Score bands then apply to the exact reranked scores,
+        matching gamma (`index/impl/gamma_index_ivfpq.cc:668,689`)."""
+        rank = has_rank and docs is not None
+        tail: dict = dict(band=(min_score, max_score))
+        if rank:
+            tail = dict(
+                pool=max(recall_num or max(4 * k, 64), k),
+                rerank=dict(
+                    docs=docs, doc_vec=doc_vec or self.doc_vec, l2_sqrt=l2_sqrt,
+                    min_score=min_score, max_score=max_score,
+                ),
             )
+        return self._search_request(
+            self.codes_df, queries, Sq8Scorer(self, metric, l2_sqrt and not rank),
+            k, nprobe, predicate, query_id=query_id, query_vec=query_vec,
+            **tail, **kw,
         )
-        if use_scan:
-            helper = IvfFlatIndex(self.centroids, pruned)
-            dv_eff, doc_decode, strategy = "_sq8", self._np_decoder(), "scan"
-        else:
-            helper = IvfFlatIndex(self.centroids, self._decode(pruned))
-            dv_eff, doc_decode = dv, None
-        # the batch is already collected and probed (the pre-decode
-        # partition prune above needs both) — hand them down so the
-        # delegated search doesn't re-collect and re-probe
-        pre = (qrows, qmat, probes)
-        if not (has_rank and docs is not None):
-            return helper.search(
-                None, queries, k=k, metric=metric, doc_vec=dv_eff, nprobe=nprobe,
-                predicate=predicate, min_score=min_score, max_score=max_score,
-                l2_sqrt=l2_sqrt, query_id=query_id, query_vec=query_vec,
-                _precomputed=pre, strategy=strategy, doc_decode=doc_decode, **kw,
-            )
-
-        pool = max(recall_num or max(4 * k, 64), k)
-        candidates = helper.search(
-            None, queries, k=pool, metric=metric, doc_vec=dv_eff, nprobe=nprobe,
-            predicate=predicate, query_id=query_id, query_vec=query_vec,
-            _precomputed=pre, strategy=strategy, doc_decode=doc_decode, **kw,
-        ).select("qid", "_docid")
-
-        from pyspark.sql.types import StructField, StructType
-
-        from gamma_spark.functions import vector as V
-        from gamma_spark.operators.topk import topk
-
-        spark = self.codes_df.sparkSession
-        qschema = StructType(
-            [
-                StructField("_qid2", queries.schema[query_id].dataType),
-                StructField("_qvec", queries.schema[query_vec].dataType),
-            ]
-        )
-        qdf = spark.createDataFrame([(r[0], r[1]) for r in qrows], schema=qschema)
-        rer = (
-            candidates.join(docs.select("_docid", dv), on="_docid", how="inner")
-            .join(F.broadcast(qdf), on=F.col("qid") == F.col("_qid2"), how="inner")
-            .select(
-                "qid",
-                "_docid",
-                V.score(metric, dv, "_qvec", l2_sqrt=l2_sqrt).alias("score"),
-            )
-        )
-        if min_score is not None:
-            rer = rer.filter(F.col("score") >= min_score)
-        if max_score is not None:
-            rer = rer.filter(F.col("score") <= max_score)
-        return topk(
-            rer, ["qid"], "score", k,
-            ascending=V.metric_ascending(metric), tiebreak_cols=["_docid"],
-        )
-
 
     # -- corpus-scale join (queries relation of any size) ----------------
 
@@ -339,57 +259,34 @@ class IvfSq8Index:
         l2_sqrt: bool = False,
         **kw,
     ) -> DataFrame:
-        """Corpus x corpus kNN join for the compressed tier: run the
-        audited IVF cogroup join code-native — the doc side shuffles
-        the 1-byte/dim ``_sq8`` codes and the per-cluster kernel
-        dequantizes at scoring (``doc_decode``), so the exchange
-        carries a quarter of the float bytes and the decode costs no
-        extra Python pass (guide §2.3/§4; scores bit-identical to
-        decode-first — the decoder rounds through float32 exactly as
-        ``_decode`` materializes). Scores are dequantized-exact by
-        default; pass ``rescore_docs`` (the raw vector relation) to
-        keep ``recall_num`` candidates per query and rescore them on
-        the true floats — with full probes and recall_num = N that
-        degenerates to exact brute force bit-for-bit (the PQ twin's
-        contract)."""
-        helper = IvfFlatIndex(self.centroids, self.codes_df)
-        dec = self._np_decoder()
-        if rescore_docs is None:
-            return helper.knn_join_distributed(
-                queries, k=k, metric=metric, nprobe=nprobe,
-                doc_vec="_sq8", doc_decode=dec, l2_sqrt=l2_sqrt, **kw,
+        """Corpus x corpus kNN join for the compressed tier: the
+        skeleton's distributed path, code-native — the doc side
+        shuffles the 1-byte/dim ``_sq8`` codes and the per-cluster
+        kernel dequantizes at scoring, so the exchange carries a
+        quarter of the float bytes and the decode costs no extra Python
+        pass (guide §2.3/§4). ``kw``: the IVFFLAT join's predicate,
+        query columns, salts, score band and hierarchical-probe knobs.
+        Scores are dequantized-exact by default; pass ``rescore_docs``
+        (the raw vector relation) to keep ``recall_num`` candidates per
+        query and rescore them on the true floats — with full probes and
+        recall_num = N that degenerates to exact brute force
+        bit-for-bit (the IVFPQ join's contract)."""
+        metric_u = metric.upper()
+        if metric_u not in FLOAT_METRICS or kw.pop("rescore", False):
+            # the codes are dequantized floats: no HAMMING; an exact
+            # rescore goes through rescore_docs
+            raise ValueError(
+                "IVFSQ8 knn_join_distributed scores IP/L2/COSINE on the "
+                "codes; use rescore_docs for an exact rescore"
             )
-
-        from gamma_spark.functions import vector as V
-        from gamma_spark.operators.topk import topk
-
-        pool = max(recall_num or max(4 * k, 64), k)
-        # (qid, _docid) pairs are unique already: the inner join's
-        # global top-pool emits at most one row per (query, doc) — a
-        # dedup here would spend a full exchange proving it
-        cand = helper.knn_join_distributed(
-            queries, k=pool, metric=metric, nprobe=nprobe,
-            doc_vec="_sq8", doc_decode=dec, l2_sqrt=l2_sqrt, **kw,
-        ).select("qid", "_docid")
-        # honor query_id/query_vec overrides riding in **kw: the
-        # candidate pass above renames to (qid, _docid), but the
-        # rescore must read the caller's OWN column names here
-        qsel = queries.select(
-            F.col(kw.get("query_id", "qid")).alias("qid"),
-            F.col(kw.get("query_vec", "qvec")).alias("_qvec"),
-        )
-        rescored = (
-            cand.join(
-                rescore_docs.select("_docid", F.col(self.doc_vec).alias("_dvec")),
-                on="_docid", how="inner",
+        band = (kw.pop("min_score", None), kw.pop("max_score", None))
+        tail: dict = {}
+        if rescore_docs is not None:
+            tail = dict(
+                pool=max(recall_num or max(4 * k, 64), k),
+                rerank=dict(docs=rescore_docs, doc_vec=self.doc_vec, l2_sqrt=l2_sqrt),
             )
-            .join(qsel, on="qid", how="inner")
-            .select(
-                "qid", "_docid",
-                V.score(metric, "_dvec", "_qvec", l2_sqrt=l2_sqrt).alias("score"),
-            )
-        )
-        return topk(
-            rescored, ["qid"], "score", k,
-            ascending=V.metric_ascending(metric), tiebreak_cols=["_docid"],
+        return self._join_distributed(
+            self.codes_df, queries, Sq8Scorer(self, metric_u, l2_sqrt), k,
+            nprobe, band=band, **tail, **kw,
         )

@@ -31,11 +31,9 @@ def merge_running_topk(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Merge a batch's candidate columns into per-row running top-``kk``
     (the numpy analogue of the reference's per-chunk binary heaps,
-    `gamma_index_flat.cc:234-268`) — ONE shared kernel for the
-    knn_scan / IVF scan / ADC scan merges, which had drifted as three
-    hand-synced copies of the subtlest code in the repo (r9
-    consolidation; arithmetic and operation order are bit-identical to
-    the former copies, gated by the driver's hash-matched rows).
+    `gamma_index_flat.cc:234-268`) — ONE shared kernel for the knn_scan
+    and IVF request-scan merges (every scorer), gated by the driver's
+    hash-matched rows.
 
     ``cur_s``/``cur_i`` are the (Q, kk) running best; ``batch_s``/
     ``batch_i`` the batch's (Q, B) candidates with B >= 1 — the merged
@@ -43,13 +41,13 @@ def merge_running_topk(
     dual-pivot tie detection probes always exists (callers skip empty
     batches). Boundary ties keep the SMALLEST ids (the SQL oracle's tie
     order): the (kk+1)-th smallest landing at column kk makes one
-    column compare detect a straddling tie (r8 dual-pivot form), and
+    column compare detect a straddling tie (dual-pivot form), and
     only tied rows pay the (score, id) lexsort repair. A non-finite kth
     means fewer than kk in-band candidates — every finite one is kept
     and inf pads are dropped at emission, so no repair is needed.
     (Corollary: a doc whose TRUE score is non-finite — an inf/NaN
     component in a stored vector — is indistinguishable from a band
-    pad and never emitted; all three callers filter
+    pad and never emitted; both callers filter
     ``isfinite(score)`` at emission. Finite inputs are the kernels'
     documented contract.)"""
     cand_s = np.concatenate([cur_s, batch_s], axis=1)
@@ -68,6 +66,31 @@ def merge_running_topk(
         out_s[r] = cand_s[r][sel]
         out_i[r] = cand_i[r][sel]
     return out_s, out_i
+
+
+def select_topk_columns(skey: np.ndarray, kk: int) -> np.ndarray:
+    """Per row, the column positions of the ``kk`` smallest keys in
+    (key, column) order — the per-cluster top-k of the IVF cogroup
+    kernels, whose columns are docid-ordered, so ties break to the
+    smaller docid exactly like the SQL oracle. One axis=1 lexsort orders
+    every row; argpartition picks ARBITRARY members among ties that
+    straddle the kk boundary, so only rows where a straddle actually
+    occurs pay the per-row repair (integer-valued metrics like HAMMING
+    and low-entropy ADC codes tie often, float scores almost never)."""
+    if skey.shape[1] <= kk:
+        # stable argsort == per-row lexsort((pos, skey))
+        return np.argsort(skey, axis=1, kind="stable")[:, :kk]
+    pre = np.argpartition(skey, kk - 1, axis=1)[:, :kk]
+    vals = np.take_along_axis(skey, pre, axis=1)
+    sel = np.take_along_axis(pre, np.lexsort((pre, vals), axis=1), axis=1)
+    kth = vals.max(axis=1)
+    straddle = np.flatnonzero(
+        np.isfinite(kth) & ((skey <= kth[:, None]).sum(axis=1) > kk)
+    )
+    for r in straddle:
+        cand = np.flatnonzero(skey[r] <= kth[r])
+        sel[r] = cand[np.lexsort((cand, skey[r][cand]))[:kk]]
+    return sel
 
 
 def topk(

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 from gamma_spark import filters as GF
 from gamma_spark.operators import knn
 from gamma_spark.operators.fusion import fuse
-
-#: past this many query vectors, expression scoring pays |docs|·Q row
-#: amplification into the top-k window; the vectorized scan kernel emits
-#: only k·Q rows per partition instead (same auto-switch as
-#: IvfFlatIndex.SCAN_STRATEGY_MIN_Q, operators/ivf.py).
-SCAN_STRATEGY_MIN_Q = 16
+from gamma_spark.operators.knn import SCAN_STRATEGY_MIN_Q
 
 #: the metadata-only size estimate cannot see filter selectivity (no
 #: CBO), so it can overestimate a small filtered batch by the parent
@@ -254,7 +249,7 @@ def search(
                 nq = vq.queries.limit(SCAN_STRATEGY_MIN_Q + 1).count()
             # the scan kernel has no HAMMING branch — non-float metrics
             # always take the join kernel regardless of batch size (the
-            # same routing rule as IvfFlatIndex's 'auto')
+            # same routing rule as the IVF request path's 'auto')
             kernel = (
                 knn.knn_scan
                 if nq > SCAN_STRATEGY_MIN_Q

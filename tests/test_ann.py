@@ -189,11 +189,13 @@ def test_probe_clusters_chunked_matches_unchunked(docs, ivf, monkeypatch):
     rng = np.random.default_rng(3)
     qmat = rng.normal(size=(37, ivf.centroids.shape[1]))
     full = ivf.probe_clusters(qmat, nprobe=3)
-    monkeypatch.setattr(type(ivf), "PROBE_CHUNK_CELLS", ivf.centroids.shape[0] * 5)
+    from gamma_spark.operators.ivfsearch import IvfBase
+
+    monkeypatch.setattr(IvfBase, "PROBE_CHUNK_CELLS", ivf.centroids.shape[0] * 5)
     chunked = ivf.probe_clusters(qmat, nprobe=3)
     assert (full == chunked).all()
     # full-probe (== ncentroids) path unchanged too
-    monkeypatch.setattr(type(ivf), "PROBE_CHUNK_CELLS", ivf.centroids.shape[0] * 2)
+    monkeypatch.setattr(IvfBase, "PROBE_CHUNK_CELLS", ivf.centroids.shape[0] * 2)
     assert (
         ivf.probe_clusters(qmat, nprobe=len(ivf.centroids))
         == np.argsort(
@@ -304,7 +306,7 @@ def test_make_exec_probe_clamps_nprobe():
     import numpy as np
     import pandas as pd
 
-    from gamma_spark.operators.ivf import make_exec_probe
+    from gamma_spark.operators.ivfsearch import make_exec_probe
 
     cents = np.arange(8, dtype=np.float64).reshape(4, 2)
     probe = make_exec_probe(cents, nprobe=99, salts=2)

@@ -41,6 +41,7 @@ _SHUFFLE_CEILINGS = {
     "knn_ip_filtered_banded": 1,
     "knn_ivfflat_exact": 1,
     "knn_ivfpq_variants_exact": 7,
+    "knn_graph_models_exact": 5,
     "knn_fusion_multivector": 16,
     "search_request_full": 2,
     "filter_range_term": 0,

@@ -513,3 +513,39 @@ def test_term_postings_tokenizes_below_the_generate(documents):
                 f"(node {mp.group(2)}):\n{above}"
             )
     assert gen_seen == 1  # exactly one explode in the postings build
+
+
+#: Spark jobs one serve-shaped request (IVFPQ + exact rerank + range
+#: filter + field projection) runs under the test's job group. An added
+#: driver round trip fails here instead of hiding in benchmark noise.
+SERVE_REQUEST_JOBS = 8
+
+
+def test_serve_shaped_request_job_budget(spark, docs):
+    from gamma_spark.filters import RangeFilter
+    from gamma_spark.operators.pq import IvfPqIndex
+    from gamma_spark.plans.search import SearchRequest, VectorQuery, search
+
+    idx = IvfPqIndex.build(docs, ncentroids=8, nsubvector=8, seed=42)
+    rows = docs.orderBy("_docid").limit(20).collect()
+    queries = spark.createDataFrame(
+        [(int(r._docid), [float(x) for x in r.embedding]) for r in rows],
+        "qid long, qvec array<float>",
+    )
+    request = SearchRequest(
+        vector_queries=[VectorQuery(
+            "embedding", queries, "L2",
+            retrieval_params={"nprobe": 4, "has_rank": True})],
+        filters=[RangeFilter("label", 0, 1)],
+        topn=5, fields=["label"],
+    )
+    sc = spark.sparkContext
+    group = "test-serve-shaped-request-job-budget"
+    sc.setJobGroup(group, "serve-shaped request")
+    try:
+        hits = search(docs, request, index=idx).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert hits and all(0 <= r.label <= 1 for r in hits)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == SERVE_REQUEST_JOBS

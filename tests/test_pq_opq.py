@@ -97,8 +97,8 @@ def test_adc_lut_bounds_preserve_results(docs, queries, monkeypatch):
     }
     # force BOTH bounds at toy scale: repartition always, cache holds
     # at most one table (every second luts_for call evicts)
-    monkeypatch.setattr(PQ, "LUT_PARTITION_BYTES", 0)
-    monkeypatch.setattr(PQ, "LUT_CACHE_BYTES", 1)
+    monkeypatch.setattr(PQ.PqScorer, "LUT_PARTITION_BYTES", 0)
+    monkeypatch.setattr(PQ.PqScorer, "LUT_CACHE_BYTES", 1)
     got = {
         (r.qid, r.rank): (r._docid, round(r.score, 9))
         for r in idx.search(None, queries, **kw).collect()

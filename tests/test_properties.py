@@ -379,6 +379,74 @@ def test_binaryivf_distributed_hamming_matches_exact(spark, n, k, salts, hier, s
     assert g == w
 
 
+@pytest.mark.parametrize("model", ["FLAT", "SQ8", "PQ", "VEARCH", "BINARY"])
+@settings(max_examples=2, deadline=None)
+@given(k=st.integers(1, 6), seed=st.integers(0, 10_000))
+def test_every_scorer_full_probe_matches_exact(spark, model, k, seed):
+    """Every per-cluster scorer of the IVF skeleton through BOTH paths —
+    the request scan and the distributed cogroup — at nprobe =
+    ncentroids against the exact brute-force kernel: ids, ranks and
+    scores (exact-rerank and Hamming scores bit-for-bit; FLAT's BLAS
+    request scan to 1e-9 relative)."""
+    import numpy as np
+
+    from gamma_spark.functions import vector as V
+    from gamma_spark.operators import knn
+    from gamma_spark.operators.ann import BinaryIvfIndex
+    from gamma_spark.operators.ivf import IvfFlatIndex
+    from gamma_spark.operators.pq import IvfPqIndex, VearchIndex
+    from gamma_spark.operators.sq import IvfSq8Index
+
+    rng = np.random.default_rng(seed)
+    n, ncent = 60, 4
+    mat = rng.normal(size=(n, 8)).astype(np.float32)
+    docs = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(n)],
+        "_docid long, embedding array<float>",
+    )
+    q = docs.limit(6).select(
+        F.col("_docid").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    exact_kw = dict(k=k, metric="L2")
+    full = dict(k=k, metric="L2", nprobe=ncent)
+    if model == "FLAT":
+        idx = IvfFlatIndex.build(docs, ncentroids=ncent, seed=seed)
+        request = idx.search(None, q, strategy="scan", **full)
+        dist = idx.knn_join_distributed(q, rescore=True, **full)
+    elif model == "SQ8":
+        idx = IvfSq8Index.build(docs, ncentroids=ncent, seed=seed)
+        request = idx.search(
+            docs, q, has_rank=True, recall_num=n, strategy="scan", **full
+        )
+        dist = idx.knn_join_distributed(q, rescore_docs=docs, recall_num=n, **full)
+    elif model in ("PQ", "VEARCH"):
+        cls = IvfPqIndex if model == "PQ" else VearchIndex
+        idx = cls.build(docs, ncentroids=ncent, nsubvector=4, seed=seed)
+        request = idx.search(docs, q, recall_num=n, has_rank=True, **full)
+        dist = idx.knn_join_distributed(q, recall_num=n, has_rank=True, **full)
+    else:
+        idx = BinaryIvfIndex.build(docs, ncentroids=ncent, seed=seed)
+        request = idx.search(None, q, k=k, nprobe=ncent)
+        dist = idx.knn_join_distributed(q, k=k, nprobe=ncent)
+        docs = docs.withColumn("sig", V.sign_bits("embedding"))
+        q = q.select("qid", V.sign_bits("qvec").alias("qsig"))
+        exact_kw = dict(k=k, metric="HAMMING", doc_vec="sig", query_vec="qsig")
+    want = {
+        (r.qid, r.rank): (r._docid, float(r.score))
+        for r in knn.knn_join(docs, q, **exact_kw).collect()
+    }
+    for path, df in (("request", request), ("distributed", dist)):
+        got = {(r.qid, r.rank): (r._docid, float(r.score)) for r in df.collect()}
+        if model == "FLAT" and path == "request":
+            assert {key: d for key, (d, _) in got.items()} == {
+                key: d for key, (d, _) in want.items()
+            }
+            for key, (_, s) in got.items():
+                assert s == pytest.approx(want[key][1], rel=1e-9, abs=1e-12)
+        else:
+            assert got == want, f"{model} {path} path"
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     tokens=st.lists(st.integers(min_value=1, max_value=300), min_size=1, max_size=60),

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gamma_spark.operators import knn
-from gamma_spark.operators.sq import IvfSq8Index
+from gamma_spark.operators.sq import IvfSq8Index, Sq8Scorer
 
 NCENT = 8
 
@@ -29,7 +29,8 @@ def test_sq8_roundtrip_error_bounded(spark, docs):
     """Dequantized vectors deviate from the originals by at most half a
     quantization step per dimension."""
     idx = IvfSq8Index.build(docs, ncentroids=NCENT, seed=42)
-    dec = {r._docid: np.array(r.embedding) for r in idx._decode(idx.codes_df).collect()}
+    decoded = Sq8Scorer(idx, "L2").decode_rel(idx.codes_df)
+    dec = {r._docid: np.array(r.embedding) for r in decoded.collect()}
     orig = {r._docid: np.array(r.embedding) for r in docs.collect()}
     step = (idx.maxs - idx.mins) / 255.0
     for d, v in orig.items():
@@ -89,6 +90,22 @@ def test_sq8_rerank_exact_degenerate(spark, docs, queries):
     assert g == w
 
 
+def test_sq8_scan_rerank_exact_degenerate(spark, docs, queries):
+    """The request scan strategy (the Sq8Scorer kernel, not the small-
+    batch Catalyst join) with full probes + recall_num = N + exact
+    rerank equals the exact float kernel bit-for-bit."""
+    n = docs.count()
+    idx = IvfSq8Index.build(docs, ncentroids=NCENT, seed=42)
+    got = idx.search(
+        docs, queries, k=10, metric="L2", nprobe=NCENT,
+        recall_num=n, has_rank=True, strategy="scan",
+    )
+    want = knn.knn_join(docs, queries, k=10, metric="L2")
+    g = {(r.qid, r.rank): (r._docid, r.score) for r in got.collect()}
+    w = {(r.qid, r.rank): (r._docid, r.score) for r in want.collect()}
+    assert g == w
+
+
 def test_sq8_via_table_build_index(spark, docs, queries):
     """The CreateTable retrieval_type surface must reach the new model."""
     from gamma_spark.table import GammaTable
@@ -133,15 +150,17 @@ def test_sq8_codes_scan_partition_pruned(tmp_path, spark, docs, queries):
 
 
 def test_sq8_code_native_paths_match_decode_first(spark, docs):
-    """r11: the scan and cogroup kernels consume raw ``_sq8`` codes and
-    dequantize at scoring (doc_decode) — results must be bit-identical
+    """The scan and cogroup kernels consume raw ``_sq8`` codes and
+    dequantize at scoring (Sq8Scorer) — results must be bit-identical
     to the decode-first reference (an IvfFlatIndex built over the
     explicitly decoded relation), on both the >SCAN_STRATEGY_MIN_Q
     request path and the distributed join."""
     from gamma_spark.operators.ivf import IvfFlatIndex
 
     idx = IvfSq8Index.build(docs, ncentroids=NCENT, seed=42)
-    ref = IvfFlatIndex(idx.centroids, idx._decode(idx.codes_df))
+    ref = IvfFlatIndex(
+        idx.centroids, Sq8Scorer(idx, "L2").decode_rel(idx.codes_df)
+    )
 
     # request path: 32 queries > SCAN_STRATEGY_MIN_Q forces the scan
     # kernel (the code-native branch)

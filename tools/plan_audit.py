@@ -47,6 +47,7 @@ AUDIT_SET = [
     "knn_ip_filtered_banded",    # K1 + F2/F8 pre-filter composition
     "knn_ivfflat_exact",         # K2 partition-pruned probe scan
     "knn_ivfpq_variants_exact",  # K3 ADC + rerank
+    "knn_graph_models_exact",    # IVF skeleton's distributed path (FLAT + PQ)
     "knn_fusion_multivector",    # R2 fusion join
     "search_request_full",       # full planner composition
     "filter_range_term",         # F2-F6 pushdown
